@@ -17,18 +17,16 @@ import org.apache.spark.sql.graft.{BloomFilter, CountMinSketch, DotProduct, KmvD
   *  - `graft_dot(array<float>, array<float>)` as a SQL-callable function
   *    (the [[DotProduct]] codegen expression), so the pure-SQL surface
   *    can run the embedding math with the same plan the DataFrame API
-  *    gets;
-  *  - the [[org.apache.spark.sql.graft.TopKPerGroupStrategy]] planner
-  *    strategy — the whole-operator extension level: per-group top-k
-  *    with map-side heap pruning (partial/final physical pair).
+  *    gets.
+  *
+  * Per-group top-k needs no extension: `row_number() <= k` plans as
+  * Spark's built-in `WindowGroupLimit`, which prunes each partition to
+  * k rows per group before the exchange.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.SimplifyLiteralCaseFilter)
-    // whole-operator extension: per-group top-k with map-side heap
-    // pruning (partial/final pair; see TopKPerGroup scaladoc)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKPerGroupStrategy)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -149,25 +149,28 @@ object Profile {
 
   /** Most-frequent values per column — the profiler's companion report
     * (top-k values with counts, the "what's actually in this column"
-    * view). NOT one `groupBy` per column (N scans) and NOT a rank
-    * window (shuffles+sorts every distinct value): ONE narrow per-row
+    * view). NOT one `groupBy` per column (N scans): ONE narrow per-row
     * explode into (col_name, value) pairs, ONE keyed count whose
     * partial aggregation collapses the stream to the distinct-value
-    * cardinality before the exchange, then the custom
-    * [[org.apache.spark.sql.graft.TopKPerGroup]] operator prunes to k
-    * per column with map-side bounded heaps BELOW its exchange. NULLs
-    * are excluded ([[profile]] already counts them); ties break by
+    * cardinality before the exchange, then `row_number() <= k` per
+    * column, which Spark plans as `WindowGroupLimit` and so prunes each
+    * partition to k values per column before the window's exchange.
+    * NULLs are excluded ([[profile]] already counts them); ties break by
     * value, so the report is deterministic and oracle-checkable. */
   def topValues(df: DataFrame, cols: Seq[String], k: Int = 5): DataFrame = {
     require(cols.nonEmpty, "no columns to report")
+    import org.apache.spark.sql.expressions.Window
     val pairs = df.select(explode(array(cols.map(c =>
         struct(lit(c).as("col_name"), col(c).cast("string").as("value"))): _*)).as("p"))
       .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
       .filter(col("value").isNotNull)
     val counted = pairs.groupBy(col("col_name"), col("value"))
       .agg(count(lit(1L)).as("cnt"))
-    org.apache.spark.sql.graft.TopKPerGroup.topK(counted,
-      Seq(col("col_name")), Seq(col("cnt").desc, col("value").asc), k)
+    counted
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("col_name")).orderBy(col("cnt").desc, col("value").asc)))
+      .filter(col("rn") <= k)
+      .drop("rn")
   }
 
   // -------------------------------------------------------------------

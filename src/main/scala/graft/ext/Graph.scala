@@ -49,7 +49,7 @@ object Graph {
     val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
     // SCALE-ADAPTIVE partition count for the round-invariant frames,
     // derived from the edge count (one cheap count over the checkpointed
-    // edge frame): ~1M edge rows per partition, capped at the session
+    // edge frame): ~100k edge rows per partition, capped at the session
     // parallelism. All three frames use the SAME explicit N — an N-less
     // repartition(col) is coalesced per-frame by AQE on small data, and
     // hashpartitioning(vertex, n1) vs hashpartitioning(src, n2) with

@@ -41,49 +41,22 @@ object Sim {
 
   private def el(c: Column, i: Int): Column = element_at(c, i).cast(DoubleType)
 
-  /** A/B switch (r20 VERDICT item 6): the r20 snapshot adopted the
-    * TopKPerGroup heap for the searcher top-k/refine pruning without a
-    * measurement, and Spark 3.5+'s WindowGroupLimit(Partial) ALREADY
-    * prunes rank-filter windows map-side — so the claimed shuffle
-    * saving was partly realized either way. The two spellings differ in
-    * the map-side mechanism only: hash-of-heaps (no sort) vs per-
-    * partition sort; rows are identical (total order per probe). */
-  private lazy val useHeapTopK = !sys.env.contains("SPARK_GRAFT_WINDOW_TOPK")
-
   private def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    if (useHeapTopK)
-      // map-side bounded heap prunes each partition to ≤ k rows per
-      // probe before the exchange; the rank window then runs over ≤ k
-      // rows per probe on the SAME hash(vec_id) partitioning — no
-      // extra exchange
-      org.apache.spark.sql.graft.TopKPerGroup.topK(
-          pairs.select(col("vec_id"), col("neighbor_id"), col("cosine")),
-          Seq(col("vec_id")), Seq(col("cosine").desc, col("neighbor_id")), k)
-        .withColumn("rank", row_number().over(w))
-        .select(col("vec_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    else
-      pairs
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    pairs
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("vec_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
 
   /** Per-probe candidate pruning to the best `r` rows under `order`
     * (a TOTAL order at every call site — ids are unique per pair), used
-    * by the refine stages. Emits narrow `(vec_id, neighbor_id)` only.
-    * Same heap-vs-window switch as [[topK]]. */
+    * by the refine stages. Emits narrow `(vec_id, neighbor_id)` only. */
   private def topKPrune(pairs: DataFrame, order: Seq[Column], r: Int): DataFrame = {
-    if (useHeapTopK)
-      org.apache.spark.sql.graft.TopKPerGroup.topK(
-          pairs, Seq(col("vec_id")), order, r)
-        .select(col("vec_id"), col("neighbor_id"))
-    else {
-      val w = Window.partitionBy(col("vec_id")).orderBy(order: _*)
-      pairs.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= r)
-        .select(col("vec_id"), col("neighbor_id"))
-    }
+    val w = Window.partitionBy(col("vec_id")).orderBy(order: _*)
+    pairs.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= r)
+      .select(col("vec_id"), col("neighbor_id"))
   }
 
   final case class Neighbor(vec_id: Long, neighbor_id: Long, cosine: Double, rank: Int)
@@ -690,7 +663,7 @@ object Sim {
       .localCheckpoint(false)
     // ONE windowed pass per curve point: hit counting and candidate
     // counting share a single scan+exchange of the checkpointed pair
-    // frame. The r20 snapshot split this into a TopKPerGroup agg
+    // frame. The r20 snapshot split this into a per-probe top-k agg
     // cross-joined with a separate count agg — two scans per point,
     // 8 jobs where there were 4 — and the driver measured 0.59×
     // (PERF_r20 ivf_nprobe_curve 2.04→3.45 s). Reverted per VERDICT

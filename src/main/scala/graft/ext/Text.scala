@@ -241,20 +241,24 @@ object Text {
     * the retrieval-side artifact of a corpus build (BM25 index shards,
     * "which docs contain X" debugging). Per-doc-DISTINCT terms (one doc
     * can't flood a term), then everything rides ONE term-keyed
-    * partitioning: df aggregation, [[org.apache.spark.sql.graft
-    * .TopKPerGroup]] cap (map-side bounded heaps — the full posting list
-    * of a stopword-ish term is never collected anywhere), and the final
-    * join of the two term-keyed sides plans with no extra exchange. The
+    * partitioning: df aggregation, the `row_number() <= maxPostings` cap
+    * (planned as `WindowGroupLimit`, which prunes each partition before
+    * the exchange — the full posting list of a stopword-ish term is
+    * never collected anywhere), and the final join of the two
+    * term-keyed sides plans with no extra exchange. The
     * capped list lands as a sorted comma-joined STRING (the ordered
     * group-concat contract — the only list encoding that hash-matches
     * across engines); `df` keeps the TRUE count, so the cap is visible
     * (df > maxPostings ⇒ truncated), never silent. */
   def invertedIndex(documents: DataFrame, maxPostings: Int = 20): DataFrame = {
     require(maxPostings > 0, s"maxPostings must be positive, got $maxPostings")
+    import org.apache.spark.sql.expressions.Window
     val terms = termStream(documents).distinct()
     val df = terms.groupBy(col("term")).agg(count(lit(1L)).as("df"))
-    val postings = org.apache.spark.sql.graft.TopKPerGroup
-      .topK(terms, Seq(col("term")), Seq(col("doc_id").asc), maxPostings)
+    val postings = terms
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("term")).orderBy(col("doc_id"))))
+      .filter(col("rn") <= maxPostings)
       .groupBy(col("term"))
       .agg(array_join( // sort NUMERICALLY first, then stringify ("9" > "10" lexically)
         transform(sort_array(collect_list(col("doc_id"))), _.cast("string")), ",")
@@ -347,10 +351,13 @@ object Text {
   def invertedIndexFromCounts(postings: DataFrame,
       maxPostings: Int = 20): DataFrame = {
     require(maxPostings > 0, s"maxPostings must be positive, got $maxPostings")
+    import org.apache.spark.sql.expressions.Window
     val terms = postings.select(col("term"), col("doc_id"))
     val df = terms.groupBy(col("term")).agg(count(lit(1L)).as("df"))
-    val capped = org.apache.spark.sql.graft.TopKPerGroup
-      .topK(terms, Seq(col("term")), Seq(col("doc_id").asc), maxPostings)
+    val capped = terms
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("term")).orderBy(col("doc_id"))))
+      .filter(col("rn") <= maxPostings)
       .groupBy(col("term"))
       .agg(array_join(
         transform(sort_array(collect_list(col("doc_id"))), _.cast("string")), ",")
@@ -1928,10 +1935,9 @@ object Text {
     * [[qualityMargin]]'s weights.
     *
     * Scale: one corpus-sized trigram explode + (lang, gram) count,
-    * then [[org.apache.spark.sql.graft.TopKPerGroup]]'s bounded-heap
-    * selection (map-side pruned — never a full rank window over the
-    * gram vocabulary); the rank window runs on the ≤ langs·k survivor
-    * frame. */
+    * then one `rank <= k` window, planned as `WindowGroupLimit` below
+    * its exchange, so each partition is pruned to k grams per language
+    * before anything shuffles. */
   def langProfiles(documents: DataFrame, k: Int = 50): DataFrame =
     langProfilesFromCounts(trigramAdd(documents), k)
 
@@ -1959,11 +1965,10 @@ object Text {
   def langProfilesFromCounts(counts: DataFrame, k: Int = 50): DataFrame = {
     require(k >= 1 && k <= 512, s"profile size must be in [1, 512], got $k")
     import org.apache.spark.sql.expressions.Window
-    org.apache.spark.sql.graft.TopKPerGroup.topK(
-        counts.select(col("lang"), col("gram"), col("cnt")),
-        Seq(col("lang")), Seq(col("cnt").desc, col("gram").asc), k)
+    counts
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("gram").asc)))
+      .filter(col("rank") <= k)
       .select(col("lang"), col("rank").cast(IntegerType).as("rank"),
         col("gram"), col("cnt"))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 /** Overlap INDEPENDENT driver-blocking work (guide §2.6): Spark's
   * scheduler happily runs several jobs at once inside one application —
@@ -35,13 +36,23 @@ object DriverPar {
   private lazy val disabled = sys.env.contains("SPARK_GRAFT_NO_PAR")
 
   /** Run `a` on the pool while `b` runs on the calling thread; return
-    * both. An exception from either side propagates (a's at the Await,
-    * b's inline) — same failure surface as sequential code. */
+    * both. Same failure surface as sequential code: `par2` returns or
+    * throws only after `a` has finished, so none of `a`'s Spark jobs or
+    * checkpoints outlive the call. A failure of `a` alone propagates
+    * from the Await; when `b` fails, its exception is rethrown once `a`
+    * is done, with `a`'s failure, if any, attached as suppressed. */
   def par2[A, B](a: => A, b: => B): (A, B) = {
     if (disabled) { val av = a; (av, b) }
     else {
       val fa = Future(a)(ec)
-      val bv = b
+      val bv =
+        try b
+        catch {
+          case NonFatal(e) =>
+            Await.ready(fa, Duration.Inf)
+            fa.value.get.failed.foreach(ea => if (ea ne e) e.addSuppressed(ea))
+            throw e
+        }
       (Await.result(fa, Duration.Inf), bv)
     }
   }

@@ -24,8 +24,12 @@ object Partitioning {
     * source is thousands of splits, the gate sees >= n partitions, and
     * this is the identity — the full payload is never exchanged just to
     * "add parallelism" it already has. The partition count comes from
-    * the plan (no job runs; physical planning of the narrow scan
-    * subtree is microseconds). */
+    * the plan: for a shuffle-free input (every call site passes the
+    * `documents` scan) no job runs, and physical planning of the narrow scan
+    * subtree is microseconds. Precondition: `df` holds no exchange —
+    * under AQE, `.rdd` of a shuffled input materializes its query
+    * stages, running jobs whose output the returned frame does not
+    * reuse. */
   def spreadIfNarrow(df: DataFrame, c: Column): DataFrame = {
     val n = numPartitions(df.sparkSession)
     if (df.rdd.getNumPartitions < n) df.repartition(n, c) else df

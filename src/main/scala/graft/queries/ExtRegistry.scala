@@ -912,8 +912,8 @@ object ExtRegistry {
 
     // language-ID profile trainer (Cavnar–Trenkle rank-order method):
     // per-language top-40 character trigrams with deterministic ranks —
-    // the shipped model artifact (langs·k rows), selected through the
-    // TopKPerGroup bounded heap, never a vocabulary-wide rank window
+    // the shipped model artifact (langs·k rows), selected by one
+    // row_number() <= k window that WindowGroupLimit prunes map-side
     "lang_profiles" -> ((s, dir) =>
       graft.ext.Text.langProfiles(Tables(s, dir).documents, k = 40)),
 
@@ -1246,7 +1246,7 @@ object ExtRegistry {
       graft.ext.Text.invertedIndex(Tables(s, dir).documents)),
 
     // most-frequent values per column: one explode + one keyed count +
-    // TopKPerGroup heap pruning (never a per-column scan or rank window)
+    // a row_number() <= k window (never a per-column scan)
     "profile_top_values" -> ((s, dir) =>
       graft.dq.Profile.topValues(Tables(s, dir).documents,
         Seq("lang", "source", "n_chars"))),
@@ -5551,8 +5551,8 @@ object ExtRegistry {
 
 
     // top-values twin: UNION ALL the profiled columns into one pair
-    // stream, count, rank by (cnt DESC, value) — the total order the
-    // TopKPerGroup operator uses, so ties cannot drift between engines
+    // stream, count, rank by (cnt DESC, value) — the total order
+    // Profile.topValues uses, so ties cannot drift between engines
     "profile_top_values" ->
       """WITH pairs AS (
         |  SELECT 'lang' AS col_name, CAST(lang AS VARCHAR) AS value

@@ -649,15 +649,17 @@ object Registry {
         col("event_id"), col("user_id"), col("event_type"), col("value"))
     }),
 
-    // whole-operator Catalyst extension: per-group top-k via the custom
-    // TopKPerGroupPlan/Strategy/Exec (map-side bounded-heap pruning
-    // before the shuffle — row_number() can't do this; the oracle IS the
-    // row_number() spelling, proving plan-shape divergence with result
-    // equality). Total order via the event_id tiebreak.
+    // per-group top-k: `row_number() <= 3` plans as WindowGroupLimit,
+    // which prunes each partition to 3 rows per type before the one
+    // hash exchange. Total order via the event_id tiebreak.
     "topk_per_group" -> ((s, dir) => {
-      val ev = Tables(s, dir).events.select(col("event_id"), col("event_type"), col("value"))
-      org.apache.spark.sql.graft.TopKPerGroup.topK(ev,
-        Seq(col("event_type")), Seq(col("value").desc, col("event_id").asc), 3)
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("event_type"))
+        .orderBy(col("value").desc, col("event_id").asc)
+      Tables(s, dir).events.select(col("event_id"), col("event_type"), col("value"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 3)
+        .drop("rn")
     }),
 
     // ORC source/sink round-trip: the second columnar interchange format

@@ -398,30 +398,15 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("partial_sum") || plan.contains("Partial"), plan)
   }
 
-  test("TopKPerGroup plans partial-over-exchange-over-partial, result == row_number") {
-    import org.apache.spark.sql.graft.{TopKPerGroup, TopKPerGroupExec}
-    import org.apache.spark.sql.expressions.Window
-    val ev = tables.events.select(col("event_id"), col("event_type"), col("value"))
-      .repartition(7) // force multi-partition input so the map-side stage matters
-    val topk = TopKPerGroup.topK(ev,
-      Seq(col("event_type")), Seq(col("value").desc, col("event_id").asc), 3)
-    topk.count() // materialize so AQE's final physical plan exists
-    val root = topk.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val execs = root.collect { case e: TopKPerGroupExec => e }
-    assert(execs.map(_.partial).sorted == Seq(false, true),
-      s"expected a partial/final pair, got $execs in:\n$root")
-    val plan = root.toString
-    // the exchange between the pair is the ONLY shuffle the operator adds
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length <= 2, plan)
-    val expected = ev.withColumn("rn",
-        row_number().over(Window.partitionBy(col("event_type"))
-          .orderBy(col("value").desc, col("event_id").asc)))
-      .filter(col("rn") <= 3).drop("rn")
-    assert(topk.exceptAll(expected).isEmpty && expected.exceptAll(topk).isEmpty,
-      "TopKPerGroup result differs from the window spelling")
+  test("topk_per_group plans WindowGroupLimit Partial below one exchange, Final above") {
+    val (_, finalPlan) = LocalSession.runToFinalPlan(
+      Registry.queries("topk_per_group")(spark, sfDir))
+    val plan = finalPlan.toString
+    // the rendered tree lists parents first: final limit, exchange, partial limit
+    val at = Seq("WindowGroupLimit.*Final", "Exchange hashpartitioning",
+        "WindowGroupLimit.*Partial").map(_.r.findFirstMatchIn(plan).map(_.start).getOrElse(-1))
+    assert(!at.contains(-1) && at == at.sorted, s"want final > exchange > partial in:\n$plan")
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
   }
 
   test("ema fold plans two keyed exchanges (monthly rollup + per-key collect), no window") {

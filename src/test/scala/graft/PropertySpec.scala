@@ -194,23 +194,27 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: TopKPerGroup equals the row_number spelling on random skewed data") {
-    import org.apache.spark.sql.expressions.Window
-    // skewed groups (one dominant key), duplicate values (tiebreak via id),
-    // a singleton group, and k larger than some groups
+  test("property: Profile.topValues equals a driver-side top-k on skewed data") {
+    // skewed groups (one dominant key), tied counts (tiebreak via the
+    // value string), a singleton group key; each group g is the column
+    // s"c$g", so topValues' per-column top-k IS the per-group top-k
     val rows = sample(for {
       g <- Gen.frequency((8, Gen.const(0)), (3, Gen.chooseNum(1, 5)), (1, Gen.const(99)))
       v <- Gen.chooseNum(-100L, 100L)
-    } yield (g, v), 400).zipWithIndex.map { case ((g, v), i) => (i.toLong, g, v) }
-    val df = rows.toDF("id", "g", "v").repartition(11)
+    } yield (g, v), 400)
+    val groups = rows.map(_._1).distinct.sorted
+    val df = rows.toDF("g", "v")
+      .select(groups.map(g => when(col("g") === g, col("v")).as(s"c$g")): _*)
+      .repartition(11)
     for (k <- Seq(1, 3, 17)) {
-      val topk = org.apache.spark.sql.graft.TopKPerGroup
-        .topK(df, Seq(col("g")), Seq(col("v").desc, col("id").asc), k)
-      val expected = df.withColumn("rn", row_number().over(
-          Window.partitionBy(col("g")).orderBy(col("v").desc, col("id").asc)))
-        .filter(col("rn") <= k).drop("rn")
-      assert(topk.exceptAll(expected).isEmpty && expected.exceptAll(topk).isEmpty,
-        s"TopKPerGroup k=$k diverges from row_number")
+      val got = graft.dq.Profile.topValues(df, groups.map(g => s"c$g"), k)
+        .as[(String, String, Long)].collect().toSet
+      val model = rows.groupBy(_._1).flatMap { case (g, rs) =>
+        rs.groupBy(_._2.toString).map { case (v, vs) => (v, vs.size.toLong) }.toSeq
+          .sortBy { case (v, n) => (-n, v) }.take(k)
+          .map { case (v, n) => (s"c$g", v, n) }
+      }.toSet
+      assert(got == model, s"topValues k=$k diverges from the Scala top-k")
     }
   }
 
