@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 
-import graft.credit.Marts
+import graft.credit.Pipeline
 import graft.synth.Synth
 
 /** Bench-only 100× synthesis scale proofs (not correctness queries — no
@@ -31,9 +31,10 @@ import graft.synth.Synth
   *  - `synth->nplMonthly` — daily snapshot join + multi-key rollup.
   *  - `synth->transitions->rollRateMonthly` and `->cureRateMonthly` —
   *    the transition family: daily arrears staging, the shared
-  *    month-end top-1 window, the lag window (`Marts.bucketTransitions`,
-  *    TWO window shuffles over natural keys — the driver's slowest
-  *    query family), then each rate mart.
+  *    month-end top-1 window, the lag window (`int_transitions`, TWO
+  *    window shuffles over natural keys — the driver's slowest query
+  *    family), then each rate mart. All three are marts of
+  *    [[graft.credit.Pipeline.synth]], which the 1× twins also call.
   *  - `embeddings->kmeansCentroids` and `->lshTopKTables` — the
   *    LLM-layer scale claims over deterministic synthetic embeddings:
   *    Lloyd training stays iters narrow passes + iters k-row shuffles
@@ -49,28 +50,6 @@ object ScaleProof {
     nBorrowers = 2000 * factor,
     nApplications = 3000 * factor,
     nLoans = 1500 * factor)
-
-  private def nplMonthly(spark: SparkSession, factor: Int): DataFrame = {
-    val loans = Synth.loans(spark, cfgFor(factor))
-    val snaps = Synth.dpdSnapshots(Synth.payments(Synth.scheduleLinear(loans)))
-    val dpd = snaps
-      .join(loans.select(
-        col("loan_id"), col("product_type"), col("currency"),
-        (col("principal_cents").cast(DecimalType(20, 2)) / lit(100))
-          .cast(DecimalType(18, 2)).as("exposure")),
-        Seq("loan_id"), "inner")
-      .withColumn("npl_flag", col("nonperforming_flag"))
-    Marts.nplMonthly(dpd)
-  }
-
-  /** Generator → daily arrears staging → month-end + lag windows — the
-    * shared upstream of both transition-rate marts (mirrors the
-    * `synth_bucket_transitions` registry composition). */
-  private def transitions(spark: SparkSession, factor: Int): DataFrame = {
-    val loans = Synth.loans(spark, cfgFor(factor))
-    Marts.bucketTransitions(Synth.arrearsDaily(
-      Synth.dpdSnapshots(Synth.payments(Synth.scheduleLinear(loans)))))
-  }
 
   /** Deterministic synthetic embeddings (d=64, components in [-0.5,0.5)
     * from the same arithmetic-hash family as [[graft.ext.Sim]]'s
@@ -194,11 +173,11 @@ object ScaleProof {
     * runs and restored afterwards —, builder). */
   private val pipelines: Seq[(String, Map[String, String], (SparkSession, Int) => DataFrame)] = Seq(
     ("synth->nplMonthly", Map.empty[String, String],
-      (s: SparkSession, f: Int) => nplMonthly(s, f)),
+      (s: SparkSession, f: Int) => Pipeline.synth(s, cfgFor(f)).nplMonthly),
     ("synth->transitions->rollRateMonthly", Map.empty[String, String],
-      (s: SparkSession, f: Int) => Marts.rollRateMonthly(transitions(s, f))),
+      (s: SparkSession, f: Int) => Pipeline.synth(s, cfgFor(f)).rollRateMonthly),
     ("synth->transitions->cureRateMonthly", Map.empty[String, String],
-      (s: SparkSession, f: Int) => Marts.cureRateMonthly(transitions(s, f))),
+      (s: SparkSession, f: Int) => Pipeline.synth(s, cfgFor(f)).cureRateMonthly),
     // the LLM-layer scale claims, proven on the same 1x/10x/100x ladder:
     // k-means training cost is iters narrow passes + iters k-row
     // shuffles (centroid state is bounded driver memory — the heap gate

@@ -632,10 +632,13 @@ object Web {
       .select(col("doc_id"), col("kept").as("rep_keep"))
     val boiler = boilerplateScreen(htmlTable(documents).as[HtmlDoc])
       .select(col("doc_id"), col("accepted").as("boiler_keep"))
+    // `rep` (one row per doc, lazily checkpointed) has no size estimate:
+    // un-hinted, AQE demoted its sort-merge join to a broadcast at run
+    // time, keeping the spine's doc_id exchange only if it had already run
     documents.select(col("doc_id"))
       .join(survivors, Seq("doc_id"), "left")
       .join(block, Seq("doc_id"))
-      .join(rep, Seq("doc_id"))
+      .join(rep.hint("merge"), Seq("doc_id"))
       .join(boiler, Seq("doc_id"))
       .select(col("doc_id"),
         coalesce(col("url_keep"), lit(0)).as("url_keep"),

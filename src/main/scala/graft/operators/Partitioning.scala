@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Explicit-N repartition: single-file parquet scans arrive as ONE
   * partition, and an N-less `repartition(col)` is coalesced back to one
@@ -23,15 +25,22 @@ object Partitioning {
     * which in this bench is the single-file parquet scan. At 100 TB the
     * source is thousands of splits, the gate sees >= n partitions, and
     * this is the identity — the full payload is never exchanged just to
-    * "add parallelism" it already has. The partition count comes from
-    * the plan: for a shuffle-free input (every call site passes the
-    * `documents` scan) no job runs, and physical planning of the narrow scan
-    * subtree is microseconds. Precondition: `df` holds no exchange —
-    * under AQE, `.rdd` of a shuffled input materializes its query
+    * "add parallelism" it already has.
+    *
+    * `df` must be shuffle-free (every call site passes the `documents`
+    * scan): the partition count comes from its physical plan, which for
+    * a narrow plan runs no job. An input with an exchange fails fast —
+    * under AQE, counting its partitions would materialize its query
     * stages, running jobs whose output the returned frame does not
     * reuse. */
   def spreadIfNarrow(df: DataFrame, c: Column): DataFrame = {
     val n = numPartitions(df.sparkSession)
-    if (df.rdd.getNumPartitions < n) df.repartition(n, c) else df
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    require(plan.collectFirst { case e @ (_: Exchange | _: QueryStageExec) => e }.isEmpty,
+      s"spreadIfNarrow needs a shuffle-free input, got:\n$plan")
+    if (plan.execute().getNumPartitions < n) df.repartition(n, c) else df
   }
 }

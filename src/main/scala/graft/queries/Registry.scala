@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.analog.Analog
-import graft.credit.Marts
+import graft.credit.{Marts, Pipeline}
 import graft.operators.Snapshots
 import graft.dq.Checks
 import graft.ext.{Sim, Text}
@@ -31,22 +30,17 @@ object Registry {
 
   // ---------------------------------------------------------------- Spark
 
-  private def arrears(s: SparkSession, dir: String) = Analog.arrears(Tables(s, dir))
-  private def loans(s: SparkSession, dir: String)   = Analog.loans(Tables(s, dir))
-  private def tiebreak = Seq(col("ts"), col("event_id"))
-
-  private def monthEndDf(s: SparkSession, dir: String): DataFrame =
-    Snapshots.monthEnd(arrears(s, dir), col("loan_id"), col("as_of_date"), tiebreak: _*)
+  private def credit(s: SparkSession, dir: String) = Pipeline.analog(Tables(s, dir))
 
   private val coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stg_arrears" -> ((s, dir) =>
-      arrears(s, dir).select(
+      credit(s, dir).stgArrearsDaily.select(
         col("event_id"), col("loan_id"), col("as_of_date"), col("days_past_due"),
         col("past_due_amount_total").cast(DoubleType).as("past_due_amount_total"),
         col("event_type"), col("dpd_bucket"), col("npl_flag"))),
 
     "stg_loans" -> ((s, dir) =>
-      loans(s, dir).select(
+      credit(s, dir).stgLoanContract.select(
         col("loan_id"), col("borrower_id"), col("product_type"), col("currency"),
         col("origination_date"), col("exposure").cast(DoubleType).as("exposure"))),
 
@@ -54,17 +48,16 @@ object Registry {
     // SimplifyLiteralCaseFilter optimizer rule rewrites for pushdown;
     // oracle-checked so the rewrite is proven semantics-preserving
     "stg_arrears_npl_band" -> ((s, dir) =>
-      arrears(s, dir).filter(col("dpd_bucket") === "90+").select(
+      credit(s, dir).stgArrearsDaily.filter(col("dpd_bucket") === "90+").select(
         col("event_id"), col("loan_id"), col("as_of_date"),
         col("days_past_due"), col("dpd_bucket"))),
 
     "dpd_daily" -> ((s, dir) =>
-      Marts.dpdDaily(arrears(s, dir), loans(s, dir))
+      credit(s, dir).dpdDaily
         .withColumn("exposure", col("exposure").cast(DoubleType))
         .withColumn("past_due_amount_total", col("past_due_amount_total").cast(DoubleType))),
 
-    "npl_monthly" -> ((s, dir) =>
-      Marts.nplMonthly(Marts.dpdDaily(arrears(s, dir), loans(s, dir)))),
+    "npl_monthly" -> ((s, dir) => credit(s, dir).nplMonthly),
 
     // exposure-weighted average DPD — the non-uniform-weight mean as
     // exact integer arithmetic: weight in cents, weighted sum as one
@@ -72,7 +65,7 @@ object Registry {
     // rows/group), then ONE IEEE division. A float-weighted avg() would
     // accumulate in partition order and never cross-engine-match
     "weighted_avg_dpd" -> ((s, dir) =>
-      Marts.dpdDaily(arrears(s, dir), loans(s, dir))
+      credit(s, dir).dpdDaily
         .select(graft.functions.CreditFunctions.monthOf(col("as_of_date")).as("month"),
           col("product_type"),
           col("days_past_due"),
@@ -94,7 +87,7 @@ object Registry {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("product_type"), col("currency"))
         .orderBy(col("month"))
-      Marts.nplMonthly(Marts.dpdDaily(arrears(s, dir), loans(s, dir)))
+      credit(s, dir).nplMonthly
         .select(col("month"), col("product_type"), col("currency"),
           col("total_exposure"))
         .withColumn("prev_exposure", lag(col("total_exposure"), 1).over(w))
@@ -110,8 +103,9 @@ object Registry {
     // prefer unique view names or Dataset.createTempView scoping so
     // concurrent queries can't clobber each other's views.
     "sql_npl_monthly" -> ((s, dir) => {
-      arrears(s, dir).createOrReplaceTempView("v_stg_arrears")
-      loans(s, dir).createOrReplaceTempView("v_stg_loans")
+      val c = credit(s, dir)
+      c.stgArrearsDaily.createOrReplaceTempView("v_stg_arrears")
+      c.stgLoanContract.createOrReplaceTempView("v_stg_loans")
       s.sql(
         """SELECT month, product_type, currency,
           |       CAST(total_exposure_dec AS DOUBLE) AS total_exposure,
@@ -127,7 +121,7 @@ object Registry {
     }),
 
     "month_end" -> ((s, dir) =>
-      monthEndDf(s, dir).select(
+      credit(s, dir).intMonthEnd.select(
         col("loan_id"), col("month"), col("as_of_date"),
         col("days_past_due"), col("dpd_bucket"), col("npl_flag"))),
 
@@ -136,26 +130,20 @@ object Registry {
     // marker, the island id, AND the final grouping
     "dpd_state_intervals" -> ((s, dir) =>
       graft.operators.Snapshots.compressIntervals(
-        monthEndDf(s, dir).select(col("loan_id"), col("month"), col("dpd_bucket")),
+        credit(s, dir).intMonthEnd.select(col("loan_id"), col("month"), col("dpd_bucket")),
         Seq("loan_id"), "month", Seq("dpd_bucket"))),
 
-    "bucket_transitions" -> ((s, dir) =>
-      Marts.bucketTransitions(arrears(s, dir), tiebreak: _*)),
+    "bucket_transitions" -> ((s, dir) => credit(s, dir).intTransitions),
 
-    "roll_rate_monthly" -> ((s, dir) =>
-      Marts.rollRateMonthly(Marts.bucketTransitions(arrears(s, dir), tiebreak: _*))),
+    "roll_rate_monthly" -> ((s, dir) => credit(s, dir).rollRateMonthly),
 
-    "cure_rate_monthly" -> ((s, dir) =>
-      Marts.cureRateMonthly(Marts.bucketTransitions(arrears(s, dir), tiebreak: _*))),
+    "cure_rate_monthly" -> ((s, dir) => credit(s, dir).cureRateMonthly),
 
-    "vintage_mob" -> ((s, dir) =>
-      Marts.vintageMob(monthEndDf(s, dir), loans(s, dir))),
+    "vintage_mob" -> ((s, dir) => credit(s, dir).vintageMob),
 
-    "writeoff_recovery_monthly" -> ((s, dir) =>
-      Marts.writeoffRecoveryMonthly(Analog.writeoffs(Tables(s, dir)))),
+    "writeoff_recovery_monthly" -> ((s, dir) => credit(s, dir).writeoffRecoveryMonthly),
 
-    "collections_monthly" -> ((s, dir) =>
-      Marts.collectionsMonthly(Analog.payments(Tables(s, dir)), loans(s, dir))),
+    "collections_monthly" -> ((s, dir) => credit(s, dir).collectionsMonthly),
 
     "densify_daily" -> ((s, dir) => {
       val o = Tables(s, dir).orders.select(
@@ -185,7 +173,7 @@ object Registry {
     // frame, so the result is tie-order-independent; decimal sums exact
     "rolling_collections_30d" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val pay = Analog.payments(Tables(s, dir))
+      val pay = credit(s, dir).stgPayments
         .withColumn("d", datediff(col("payment_date"), to_date(lit("1992-01-01"))))
       val w = Window.partitionBy(col("loan_id")).orderBy(col("d")).rangeBetween(-29, 0)
       pay.select(col("loan_id"), col("payment_date"),
@@ -197,9 +185,9 @@ object Registry {
     // scale-safe form — no extra distinct-values job, stable schema);
     // payments by product pivoted across the three settlement currencies
     "pivot_collections" -> ((s, dir) => {
-      val pay = Analog.payments(Tables(s, dir))
-      val l = loans(s, dir)
-      pay.join(l.select(col("loan_id"), col("product_type")), Seq("loan_id"), "inner")
+      val c = credit(s, dir)
+      c.stgPayments.join(c.stgLoanContract.select(col("loan_id"), col("product_type")),
+          Seq("loan_id"), "inner")
         .groupBy(col("product_type"))
         .pivot("currency", Seq("A", "N", "R"))
         .agg(sum(col("amount_received")))
@@ -212,7 +200,7 @@ object Registry {
     // EXCEPT / INTERSECT set semantics (deduplicating, like SQL) over
     // the delinquent vs NPL loan-id sets, labeled and unioned
     "set_ops_loans" -> ((s, dir) => {
-      val a = arrears(s, dir)
+      val a = credit(s, dir).stgArrearsDaily
       val delinquent = a.filter(col("days_past_due") > 0).select(col("loan_id"))
       val npl = a.filter(col("npl_flag")).select(col("loan_id"))
       delinquent.except(npl).select(lit("delinquent_not_npl").as("set_name"), col("loan_id"))
@@ -447,8 +435,10 @@ object Registry {
       Sim.ivfNprobeCurve(Tables(s, dir).embeddings, k = 5, coarseK = 8, iters = 2,
         nProbes = Seq(1, 2, 4, 8), probeMod = Some((3L, 1L)))),
 
-    "dq_suite" -> ((s, dir) =>
-      Checks.suite(arrears(s, dir), loans(s, dir), Analog.payments(Tables(s, dir)))),
+    "dq_suite" -> ((s, dir) => {
+      val c = credit(s, dir)
+      Checks.suite(c.stgArrearsDaily, c.stgLoanContract, c.stgPayments)
+    }),
 
     // the streaming surface driven in batch mode: dailyWorstDpd is
     // readStream/read agnostic (same plan, the watermark is a no-op on a
@@ -506,9 +496,10 @@ object Registry {
     // salts-fold), so the SAME dpd_daily oracle hash-proves the rewrite
     // is semantics-preserving end-to-end
     "dpd_daily_salted" -> ((s, dir) => {
+      val c = credit(s, dir)
       val joined = graft.operators.Skew.saltedJoin(
-        arrears(s, dir),
-        loans(s, dir).select(
+        c.stgArrearsDaily,
+        c.stgLoanContract.select(
           col("loan_id"), col("borrower_id"), col("product_type"),
           col("currency"), col("origination_date"), col("exposure")),
         "loan_id", 8)
@@ -553,7 +544,7 @@ object Registry {
     // +1000000 keys). The oracle is the declarative UNION of the same
     // five branches — merge semantics proven, not echoed.
     "scd2_merge" -> ((s, dir) => {
-      val l = loans(s, dir).withColumn("loan_id", col("loan_id").cast(LongType))
+      val l = credit(s, dir).stgLoanContract.withColumn("loan_id", col("loan_id").cast(LongType))
       val dim = l.select(
         col("loan_id"), col("product_type"), col("currency"), col("exposure"),
         col("origination_date").as("valid_from"),
@@ -578,7 +569,7 @@ object Registry {
     // appears. The oracle states the BETWEEN semantics directly, so the
     // rewrite is proven result-identical.
     "interval_join_payments" -> ((s, dir) => {
-      val pay = Analog.payments(Tables(s, dir))
+      val pay = credit(s, dir).stgPayments
         .select(col("loan_id"), col("payment_date"),
           col("amount_received").cast(DoubleType).as("amount_received"))
       val iv = Tables(s, dir).orders.select(
@@ -600,7 +591,7 @@ object Registry {
     // — the diff reports added/removed/changed keys with the offending
     // column names, and identical rows never appear
     "table_diff" -> ((s, dir) => {
-      val l = loans(s, dir).withColumn("loan_id", col("loan_id").cast(LongType))
+      val l = credit(s, dir).stgLoanContract.withColumn("loan_id", col("loan_id").cast(LongType))
         .select(col("loan_id"), col("product_type"), col("exposure"))
       val r = l.filter(col("loan_id") % 11 =!= 0)
         .select(col("loan_id"),
@@ -622,7 +613,7 @@ object Registry {
     // sharing npl_monthly's oracle verbatim. At 100 TB this is the
     // difference between scanning one month and scanning the history.
     "npl_monthly_incremental" -> ((s, dir) => {
-      val dd = Marts.dpdDaily(arrears(s, dir), loans(s, dir))
+      val dd = credit(s, dir).dpdDaily
       val m = date_trunc("month", col("as_of_date")).cast(DateType)
       val cutoffRow = dd.agg(max(m).as("m")).head()
       if (cutoffRow.isNullAt(0)) Marts.nplMonthly(dd)
@@ -917,8 +908,7 @@ object Registry {
   /** Flagship: monthly NPL ratios end-to-end (scan → cast-projection →
     * bucket/flag derivation → dim join → conditional agg → guarded ratio). */
   def entry(spark: SparkSession): DataFrame =
-    Marts.nplMonthly(Marts.dpdDaily(
-      arrears(spark, "/root/testdata/sf0.001"), loans(spark, "/root/testdata/sf0.001")))
+    credit(spark, "/root/testdata/sf0.001").nplMonthly
 
   // --------------------------------------------------------------- Oracle
 

@@ -3,8 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.credit.Marts
-import graft.operators.Snapshots
+import graft.credit.{Marts, Pipeline}
 import graft.synth.Synth
 import graft.synth.Synth.Rng.uSql
 
@@ -23,14 +22,6 @@ import graft.synth.Synth.Rng.uSql
 object SynthRegistry {
 
   private def sl(s: SparkSession) = Synth.scheduleLinear(Synth.loans(s))
-
-  /** Daily worst-DPD arrears over the synth snapshot fact — the input of
-    * the transition-family marts. The synth world spans 2015–2024, so the
-    * W2 lag produces REAL month-over-month transitions here (the external
-    * events testdata covers a single month and exercises those marts only
-    * vacuously). */
-  private def sarr(s: SparkSession) =
-    Synth.arrearsDaily(Synth.dpdSnapshots(Synth.payments(sl(s))))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "synth_loans" -> ((s, _) =>
@@ -78,46 +69,19 @@ object SynthRegistry {
 
     "synth_chronology_audit" -> ((s, _) => Synth.chronologyAudit(Synth.loans(s), Synth.applications(s))),
 
-    // the reference's full loop — synthesize OLTP world, stage, run the
-    // SAME mart transform the external-data queries use (Marts.nplMonthly)
-    "synth_npl_monthly" -> ((s, _) => {
-      val loans = Synth.loans(s)
-      val snaps = Synth.dpdSnapshots(Synth.payments(Synth.scheduleLinear(loans)))
-      val dpd = snaps
-        .join(loans.select(
-          col("loan_id"), col("product_type"), col("currency"),
-          (col("principal_cents").cast(org.apache.spark.sql.types.DecimalType(20, 2)) / lit(100))
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("exposure")),
-          Seq("loan_id"), "inner")
-        .withColumn("npl_flag", col("nonperforming_flag"))
-      graft.credit.Marts.nplMonthly(dpd)
-    }),
+    // the reference's full loop over the synth world, through the same
+    // Pipeline as the external-data marts; 2015–2024 gives real W2 transitions
+    "synth_npl_monthly" -> ((s, _) => Pipeline.synth(s).nplMonthly),
 
-    // the full reference loop for the transition-family marts: generator →
-    // daily arrears staging → the SAME Marts transforms the external-data
-    // queries use — non-vacuous here (multi-year span ⇒ real transitions)
-    "synth_bucket_transitions" -> ((s, _) => Marts.bucketTransitions(sarr(s))),
+    "synth_bucket_transitions" -> ((s, _) => Pipeline.synth(s).intTransitions),
 
-    "synth_roll_rate_monthly" -> ((s, _) =>
-      Marts.rollRateMonthly(Marts.bucketTransitions(sarr(s)))),
+    "synth_roll_rate_monthly" -> ((s, _) => Pipeline.synth(s).rollRateMonthly),
 
-    "synth_cure_rate_monthly" -> ((s, _) =>
-      Marts.cureRateMonthly(Marts.bucketTransitions(sarr(s)))),
+    "synth_cure_rate_monthly" -> ((s, _) => Pipeline.synth(s).cureRateMonthly),
 
-    "synth_vintage_mob" -> ((s, _) =>
-      Marts.vintageMob(
-        Snapshots.monthEnd(sarr(s), col("loan_id"), col("as_of_date")),
-        Synth.loans(s).select(col("loan_id"), col("origination_date")))),
+    "synth_vintage_mob" -> ((s, _) => Pipeline.synth(s).vintageMob),
 
-    "synth_collections_monthly" -> ((s, _) => {
-      val loans = Synth.loans(s)
-      val pay = Synth.payments(sl(s))
-        .join(loans.select(col("loan_id"), col("currency")), Seq("loan_id"), "inner")
-        .select(col("loan_id"), col("payment_date"), col("currency"),
-          (col("amount_cents").cast(org.apache.spark.sql.types.DecimalType(20, 2)) / lit(100))
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("amount_received"))
-      Marts.collectionsMonthly(pay, loans.select(col("loan_id"), col("product_type")))
-    }),
+    "synth_collections_monthly" -> ((s, _) => Pipeline.synth(s).collectionsMonthly),
 
     "synth_borrowers" -> ((s, _) => Synth.borrowers(s)),
 
@@ -153,20 +117,7 @@ object SynthRegistry {
         col("recovery_case_id"), col("recovery_payment_id"),
         col("recovery_amount"), col("recovery_date"))),
 
-    // the writeoff mart over the synth world (the last of the 7 marts to
-    // close the generator -> staging -> mart loop)
-    "synth_writeoff_recovery_monthly" -> ((s, _) => {
-      import org.apache.spark.sql.types.DecimalType
-      val wo = Synth.writeOffAndRecovery(Synth.collectionsCases(Synth.loans(s)))
-      def dec(c: String) =
-        (col(c).cast(DecimalType(20, 2)) / lit(100)).cast(DecimalType(18, 2))
-      Marts.writeoffRecoveryMonthly(wo.select(
-        col("loan_id"), col("writeoff_date"), col("recovery_date"),
-        dec("wo_principal_cents").as("writeoff_amount_principal"),
-        dec("wo_interest_cents").as("writeoff_amount_interest"),
-        dec("wo_fees_cents").as("writeoff_amount_fees"),
-        dec("recovery_amount_cents").as("recovery_amount")))
-    }),
+    "synth_writeoff_recovery_monthly" -> ((s, _) => Pipeline.synth(s).writeoffRecoveryMonthly),
 
     // integer-cents sequential recurrence — oracle is a WITH RECURSIVE twin
     "synth_annuity_schedule" -> ((s, _) =>
@@ -180,8 +131,10 @@ object SynthRegistry {
     // unpartitioned; the mart runs over the READ-BACK frames, so schema
     // fidelity across write/read (dates, longs, partition-column
     // recovery) is what the synth_npl_monthly oracle hash-checks here.
+    // Only the cents cast is Pipeline's: its stg_loan_contract needs loan
+    // columns this round trip doesn't write (borrower_id, origination_date,
+    // term_months).
     "synth_npl_monthly_roundtrip" -> ((s, _) => {
-      import org.apache.spark.sql.types.DecimalType
       val loans = Synth.loans(s)
       val snaps = Synth.dpdSnapshots(Synth.payments(Synth.scheduleLinear(loans)))
       val base = graft.sources.Scratch.dir("graft_synth_rt")
@@ -197,8 +150,7 @@ object SynthRegistry {
       val dpd = s.read.parquet(snapPath)
         .join(s.read.parquet(loanPath).select(
           col("loan_id"), col("product_type"), col("currency"),
-          (col("principal_cents").cast(DecimalType(20, 2)) / lit(100))
-            .cast(DecimalType(18, 2)).as("exposure")),
+          Pipeline.cents("principal_cents").as("exposure")),
           Seq("loan_id"), "inner")
         .withColumn("npl_flag", col("nonperforming_flag"))
       Marts.nplMonthly(dpd)

@@ -2,13 +2,15 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.operators.DriverPar
 
 /** `DriverPar.par2` keeps the failure surface of sequential code: it
-  * never returns or throws while its pooled side is still running. */
-class DriverParSpec extends AnyFunSuite {
+  * never returns or throws while its pooled side is still running; and
+  * its pooled side runs under the caller's current job group. */
+class DriverParSpec extends SparkSpec {
 
   test("par2 waits for a before rethrowing b's failure") {
     val aDone = new AtomicBoolean(false)
@@ -36,5 +38,25 @@ class DriverParSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "a")
     assert(DriverPar.par2(1, "b") == ((1, "b")))
+  }
+
+  test("par2 runs a's Spark jobs under the caller's current job group") {
+    assume(!sys.env.contains("SPARK_GRAFT_NO_PAR"))
+    val sc = spark.sparkContext
+    val (g1, g2) = ("driverpar-g1", "driverpar-g2")
+    try {
+      // the first call creates (or reuses) a pool thread while g1 is set
+      sc.setJobGroup(g1, "first call")
+      DriverPar.par2((), ())
+      // let that thread go idle, so the next task reuses it
+      Thread.sleep(200)
+      sc.setJobGroup(g2, "second call")
+      DriverPar.par2(sc.parallelize(1 to 4, 1).count(), ())
+    } finally sc.clearJobGroup()
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(g2).nonEmpty,
+        s"no $g2 job; $g1 jobs: ${sc.statusTracker.getJobIdsForGroup(g1).mkString(",")}")
+    }
+    assert(sc.statusTracker.getJobIdsForGroup(g1).isEmpty)
   }
 }

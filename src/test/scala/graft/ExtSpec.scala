@@ -1338,31 +1338,19 @@ class ExtSpec extends SparkSpec {
       graft.ext.Corpus.bloomContamination(docs, 3).collect().toSet)
   }
 
-  test("Profile.topValues equals the rank-window spelling; NULLs excluded, ties break by value") {
-    import org.apache.spark.sql.expressions.Window
+  test("Profile.topValues excludes NULLs and breaks count ties by value") {
     val df = Seq(
       ("a", "x"), ("a", "x"), ("a", "y"), ("a", null), // a: x=2, y=1
       ("b", "x"), ("c", "x"), ("c", "x"), ("d", "x"), ("e", "x"), ("f", "x"),
       ("g", "x")).toDF("u", "v")
     val got = graft.dq.Profile.topValues(df, Seq("u", "v"), k = 3)
       .as[(String, String, Long)].collect().toSet
-    // window twin on the same counts
-    val counted = df.select(explode(array(
-        struct(lit("u").as("col_name"), col("u").cast("string").as("value")),
-        struct(lit("v").as("col_name"), col("v").cast("string").as("value")))).as("p"))
-      .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
-      .filter(col("value").isNotNull)
-      .groupBy("col_name", "value").agg(count(lit(1L)).as("cnt"))
-    val win = counted.withColumn("rn", row_number().over(
-        Window.partitionBy("col_name").orderBy(col("cnt").desc, col("value").asc)))
-      .filter(col("rn") <= 3).drop("rn")
-      .as[(String, String, Long)].collect().toSet
-    assert(got == win)
     // u counts: a=4, c=2, then six singletons — the lexicographically
     // smallest singleton (b) takes the last slot deterministically
     assert(got.filter(_._1 == "u") == Set(("u", "a", 4L), ("u", "c", 2L), ("u", "b", 1L)))
     // v: the NULL is excluded, x=9, y=1
     assert(got.filter(_._1 == "v") == Set(("v", "x", 9L), ("v", "y", 1L)))
+    assert(got.size == 5)
   }
 
   test("bloomContamination dominates the exact audit: bloom_hits >= eval_hits, no clean doc flagged dirty") {

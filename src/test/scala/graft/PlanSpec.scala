@@ -545,8 +545,13 @@ class PlanSpec extends SparkSpec {
       // probes on the doc spine
       // r21: +1 exchange — htmlExtract's scan-aware spread (the per-char
       // state machine must not ride the one-task single-file scan; the
-      // gate is identity once the source has >= cores splits)
-      "web_curation_keeplist" -> ((4, 6, Map("BroadcastHashJoin" -> 6))),
+      // gate is identity once the source has >= cores splits).
+      // The per-doc reputation verdict joins the spine under a merge hint:
+      // un-hinted, AQE demoted that join to a broadcast at run time and
+      // kept the spine's doc_id exchange in some runs only (4 or 5
+      // shuffles); hinted, both sides always shuffle once on doc_id
+      "web_curation_keeplist" ->
+        ((5, 5, Map("SortMergeJoin" -> 1, "BroadcastHashJoin" -> 5))),
       // the pack's keep-list semi-join carries an explicit merge hint
       // (ExtRegistry): its keep side is corpus-sized at 100 TB but sat
       // exactly on the AQE broadcast threshold at this tier, so the
@@ -554,9 +559,10 @@ class PlanSpec extends SparkSpec {
       // full-suite failures on this very pin). The hint makes the
       // pinned SMJ deterministic.
       // (+1 exchange in r21: htmlExtract's scan-aware spread, as
-      // web_curation_keeplist)
+      // web_curation_keeplist; the second sort-merge join is the
+      // keep-list's merge-hinted reputation join)
       "web_curation_pack" ->
-        ((7, 6, Map("SortMergeJoin" -> 1, "BroadcastHashJoin" -> 6))),
+        ((7, 5, Map("SortMergeJoin" -> 2, "BroadcastHashJoin" -> 5))),
       // r18: fused one-projection crawl-trap pass — one repartition
       // exchange reused by all three nested aggregations, zero joins
       // (r17 judge flagged the previous three-way self-join)
