@@ -63,6 +63,11 @@ object Pipeline {
         cents("recovery_amount_cents").as("recovery_amount"))
     lazy val intLoanDaily: DataFrame = Synth.arrearsDaily(
       stgArrearsDaily.select(col("loan_id"), col("as_of_date"), col("days_past_due")))
+    // the generated arrears are an explode of an explode of a `range`,
+    // whose size estimate stays at loan-table scale, so unhinted the
+    // join broadcasts the snapshots (millions of rows at 100x), not the
+    // one-row-per-loan contract
+    override def dpdDaily: DataFrame = Marts.dpdDaily(stgArrearsDaily, broadcast(stgLoanContract))
   }
 
   /** The testdata tier through [[Analog]]; its arrears repeat loan-days,

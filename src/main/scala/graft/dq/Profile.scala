@@ -193,7 +193,7 @@ object Profile {
   /** ONE delta's (type, day)-grouped HLL register state — ≤ 256 rows
     * per (type, day) no matter how hot the day is (the sketch IS the
     * skew mitigation). [[graft.operators.Hll.mergeHllBy]] merges any
-    * two deltas exactly. */
+    * number of deltas exactly. */
   def hllDailyAdd(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String): DataFrame =
     graft.operators.Hll.hllAddBy(

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.KMeansCells
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** Trained coarse quantization: seeded Lloyd's k-means over the int8
   * quantized embedding grid, plus the two pipeline consumers — cluster
   * labels and SemDeDup-style within-cluster near-duplicate pairs.
@@ -391,18 +393,15 @@ object Cluster {
     occupancyLongForm(encoded, d)
   }
 
-  /** Exact merge of two occupancy long-form frames over the SAME
-    * quantizer: per (cell, dim) the int64 component sums and member
+  /** Exact merge of any number of occupancy long-form frames over the
+    * SAME quantizer: per (cell, dim) the int64 component sums and member
     * counts add, and the mean re-derives from the merged integers — so
-    * the merge of two delta encodes is bit-identical to one encode of
-    * the union (the [[indexAdd]] composition contract). A cell occupied
-    * by only one side passes through; a cell occupied by neither stays
-    * absent (the non-empty-cells-only convention of every producer). */
-  def mergeOccupancy(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("cell"), col("dim"), col("s"), col("n"))
-      .unionByName(b.select(col("cell"), col("dim"), col("s"), col("n")))
-      .groupBy(col("cell"), col("dim"))
-      .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
+    * merged delta encodes are bit-identical to one encode of the union
+    * (the [[indexAdd]] composition contract). A cell occupied by some
+    * states passes through; a cell occupied by none stays absent (the
+    * non-empty-cells-only convention of every producer). */
+  def mergeOccupancy(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("cell", "dim"), "s" -> States.Sum, "n" -> States.Sum)
       .select(col("cell"), col("dim"), col("s"), col("n"),
         (col("s").cast(DoubleType) / col("n").cast(DoubleType)).as("mean"))
 

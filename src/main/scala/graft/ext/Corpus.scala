@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
+import graft.operators.States
+
 /** Corpus-assembly operators for a training-data pipeline: deterministic
   * splits and the composed "clean corpus" materialization. */
 object Corpus {
@@ -541,11 +543,9 @@ object Corpus {
         sum(when(col("wnd") === 0, 1L).otherwise(0L)).as("na"),
         sum(when(col("wnd") === 1, 1L).otherwise(0L)).as("nb"))
 
-  /** Merge drift-state deltas: exact integer sums per (source, bucket). */
+  /** Merge any number of drift states: exact integer sums per (source, bucket). */
   def mergeDriftStates(states: DataFrame*): DataFrame =
-    states.reduce(_ unionByName _)
-      .groupBy(col("source"), col("bucket"))
-      .agg(sum(col("na")).as("na"), sum(col("nb")).as("nb"))
+    States.merge(states, Seq("source", "bucket"), "na" -> States.Sum, "nb" -> States.Sum)
 
   /** Drift report off the maintained state: per source, the
     * total-variation distance between the two windows' length

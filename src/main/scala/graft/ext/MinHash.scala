@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** MinHash+LSH and SimHash near-duplicate detection over `documents`.
   *
   * All hashing is engine-agnostic integer arithmetic (no murmur/xxhash —
@@ -131,12 +133,9 @@ object MinHash {
     * first-wins idempotency [[graft.sources.Load.firstWins]] gives the
     * exact-dedup path. One key-hash exchange over state-sized (not
     * corpus-sized) rows. */
-  def mergeMinhash(states: DataFrame*): DataFrame = {
-    val cols = Seq(col("doc_id"), col("hashes")) ++
-      (0 until NumHashes).map(k => col(s"sig$k"))
-    states.map(_.select(cols: _*)).reduce(_ unionByName _)
-      .dropDuplicates("doc_id")
-  }
+  def mergeMinhash(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("doc_id"),
+      ("hashes" +: (0 until NumHashes).map(k => s"sig$k")).map(_ -> States.First): _*)
 
   /** Candidate pairs sharing at least one LSH band, screened by
     * signature similarity, then verified with exact Jaccard over the
@@ -314,9 +313,7 @@ object MinHash {
   /** Exact merge of [[simhashAdd]] states: id-keyed first-wins union
     * (duplicate rows are value-identical; see [[mergeMinhash]]). */
   def mergeSimhash(states: DataFrame*): DataFrame =
-    states.map(_.select(col("doc_id"), col("simhash")))
-      .reduce(_ unionByName _)
-      .dropDuplicates("doc_id")
+    States.merge(states, Seq("doc_id"), "simhash" -> States.First)
 
   /** SimHash near-dup pairs off a maintained [[simhashAdd]] state: band
     * the sketch (see [[SimBandBits]] — the banding is pigeonhole-exact

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, plus decode / feature-extract /
   * frame-sample stages.
@@ -1638,9 +1640,7 @@ object Multimodal {
   /** Exact merge of [[audioSketchAdd]] states: id-keyed first-wins
     * union (duplicate rows are value-identical). */
   def mergeAudioSketch(states: DataFrame*): DataFrame =
-    states.map(_.select(col("doc_id"), col("sketch")))
-      .reduce(_ unionByName _)
-      .dropDuplicates("doc_id")
+    States.merge(states, Seq("doc_id"), "sketch" -> States.First)
 
   /** NEAR-duplicate audio pairs at Hamming ≤ `maxHamming` off a
     * maintained [[audioSketchAdd]] state — the same 4×16-bit MIH
@@ -1809,9 +1809,7 @@ object Multimodal {
   /** Exact merge of [[phashAdd]] states: id-keyed first-wins union
     * (duplicate rows are value-identical). */
   def mergePhash(states: DataFrame*): DataFrame =
-    states.map(_.select(col("doc_id"), col("phash")))
-      .reduce(_ unionByName _)
-      .dropDuplicates("doc_id")
+    States.merge(states, Seq("doc_id"), "phash" -> States.First)
 
   /** NEAR-duplicate image pairs at Hamming ≤ `maxHamming` off a
     * maintained [[phashAdd]] state — banding and verify over STATE

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** Similarity search over embedding columns (`ArrayType(FloatType)`).
   *
   * Numeric-determinism contract (oracle hash-parity): every float is cast
@@ -456,9 +458,8 @@ object Sim {
   /** Exact merge of [[ivfIndexAdd]] states: id-keyed first-wins union
     * (duplicate rows are value-identical under one quantizer). */
   def mergeIvfIndex(states: DataFrame*): DataFrame =
-    states.map(_.select(col("vec_id"), col("embedding"), col("nsq"), col("cell")))
-      .reduce(_ unionByName _)
-      .dropDuplicates("vec_id")
+    States.merge(states, Seq("vec_id"),
+      Seq("embedding", "nsq", "cell").map(_ -> States.First): _*)
 
   /** Delta-vs-state ANN — [[graft.ext.MinHash.nearDupDeltaPairs]]'
     * incremental discipline on the vector stack: a DELTA of new

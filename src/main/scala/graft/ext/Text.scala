@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** Text-analysis operators for an LLM training-data pipeline, over the
   * `documents` table (doc_id, text, lang, source, n_chars).
   *
@@ -315,12 +317,10 @@ object Text {
     termStream(delta).groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1L)).as("tf"))
 
-  /** Exact merge of two [[postingsAdd]] states: per-(doc, term) int64
-    * sums — associative and order-free. */
-  def mergePostings(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("doc_id"), col("term"), col("tf"))
-      .unionByName(b.select(col("doc_id"), col("term"), col("tf")))
-      .groupBy(col("doc_id"), col("term")).agg(sum(col("tf")).as("tf"))
+  /** Exact merge of any number of [[postingsAdd]] states: per-(doc,
+    * term) int64 sums — associative and order-free. */
+  def mergePostings(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("doc_id", "term"), "tf" -> States.Sum)
 
   /** [[tfIdfTopTerms]] driven off an EXTERNAL [[postingsAdd]]/
     * [[mergePostings]] state — the same maintained index serving the
@@ -536,12 +536,10 @@ object Text {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Exact merge of two [[shingleCountAdd]] states: per-shingle int64
-    * count sums — associative and order-free. */
-  def mergeShingleCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("sh"), col("cnt"))
-      .unionByName(b.select(col("sh"), col("cnt")))
-      .groupBy(col("sh")).agg(sum(col("cnt")).as("cnt"))
+  /** Exact merge of any number of [[shingleCountAdd]] states:
+    * per-shingle int64 count sums — associative and order-free. */
+  def mergeShingleCounts(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("sh"), "cnt" -> States.Sum)
 
   /** [[duplicateSpans]] driven off an EXTERNAL count state instead of a
     * fresh corpus-wide count — the read side of the incremental
@@ -645,17 +643,13 @@ object Text {
         col("f.pos").as("fpos"))
   }
 
-  /** Exact merge of two [[shingleFirstAdd]] states: int64 count sums +
-    * the struct-min of the two first occurrences. */
-  def mergeShingleFirsts(a: DataFrame, b: DataFrame): DataFrame = {
-    val cols = Seq("sh", "cnt", "fdoc", "fpos").map(col)
-    a.select(cols: _*).unionByName(b.select(cols: _*))
-      .groupBy(col("sh"))
-      .agg(sum(col("cnt")).as("cnt"),
-        min(struct(col("fdoc"), col("fpos"))).as("f"))
+  /** Exact merge of any number of [[shingleFirstAdd]] states: int64
+    * count sums + the struct-min of the first occurrences. */
+  def mergeShingleFirsts(states: DataFrame*): DataFrame =
+    States.merge(states.map(_.withColumn("f", struct(col("fdoc"), col("fpos")))),
+        Seq("sh"), "cnt" -> States.Sum, "f" -> States.Min)
       .select(col("sh"), col("cnt"), col("f.fdoc").as("fdoc"),
         col("f.fpos").as("fpos"))
-  }
 
   /** [[cutDuplicateSpans]] driven off an EXTERNAL
     * [[shingleFirstAdd]]/[[mergeShingleFirsts]] state instead of a
@@ -795,12 +789,10 @@ object Text {
   def wordFreqAdd(delta: DataFrame): DataFrame =
     termStream(delta).groupBy(col("term")).agg(count(lit(1L)).as("freq"))
 
-  /** Exact merge of two [[wordFreqAdd]] states: per-term int64 sums —
-    * associative and order-free. */
-  def mergeWordFreqs(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("term"), col("freq"))
-      .unionByName(b.select(col("term"), col("freq")))
-      .groupBy(col("term")).agg(sum(col("freq")).as("freq"))
+  /** Exact merge of any number of [[wordFreqAdd]] states: per-term
+    * int64 sums — associative and order-free. */
+  def mergeWordFreqs(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("term"), "freq" -> States.Sum)
 
   /** Adjacent-symbol pair counts over a vocabulary frame, UNORDERED —
     * the shared aggregation both ranking policies (BPE's raw count,
@@ -1788,14 +1780,11 @@ object Text {
       .agg(count(lit(1)).as("n_scored"), sum(col("weight")).as("margin"))
   }
 
-  /** Exact merge of two [[marginAdd]] states: per-doc int64 sums —
-    * associative and order-free (docs SPLIT across deltas also merge
-    * exactly, since both fields are plain occurrence sums). */
-  def mergeMargins(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("doc_id"), col("n_scored"), col("margin"))
-      .unionByName(b.select(col("doc_id"), col("n_scored"), col("margin")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n_scored")).as("n_scored"), sum(col("margin")).as("margin"))
+  /** Exact merge of any number of [[marginAdd]] states: per-doc int64
+    * sums — associative and order-free (docs SPLIT across deltas also
+    * merge exactly, since both fields are plain occurrence sums). */
+  def mergeMargins(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("doc_id"), "n_scored" -> States.Sum, "margin" -> States.Sum)
 
   /** The read side of the margin-state contract: total annotation off a
     * maintained state — one doc-spine left join, no corpus scan. Output
@@ -1953,12 +1942,10 @@ object Text {
     charTrigrams(delta)
       .groupBy(col("lang"), col("gram")).agg(count(lit(1)).as("cnt"))
 
-  /** Exact merge of two [[trigramAdd]] states: per-(lang, gram) int64
-    * sums — associative and order-free. */
-  def mergeTrigrams(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("lang"), col("gram"), col("cnt"))
-      .unionByName(b.select(col("lang"), col("gram"), col("cnt")))
-      .groupBy(col("lang"), col("gram")).agg(sum(col("cnt")).as("cnt"))
+  /** Exact merge of any number of [[trigramAdd]] states: per-(lang,
+    * gram) int64 sums — associative and order-free. */
+  def mergeTrigrams(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("lang", "gram"), "cnt" -> States.Sum)
 
   /** The profile-ranking read side off a maintained trigram state —
     * the trainer with its one corpus-sized pass already paid. */
@@ -2178,8 +2165,7 @@ object Text {
   /** Exact merge of [[fingerprintAdd]] states: posting-set union
     * (duplicate rows are value-identical — first-wins by distinct). */
   def mergeFingerprints(states: DataFrame*): DataFrame =
-    states.map(_.select(col("doc_id"), col("sh")))
-      .reduce(_ unionByName _).distinct()
+    States.merge(states, Seq("doc_id", "sh"))
 
   /** [[fingerprintNearDups]] off a maintained [[fingerprintAdd]] state
     * — df-prune, pair join and containment over STATE rows, never
@@ -2450,19 +2436,15 @@ object Text {
         col("n_docs"), col("f.doc_id").as("fdoc"),
         col("f.start_pos").as("fpos"))
 
-  /** Exact merge of two [[cdcChunkAdd]] states: int64 count sums (doc
-    * sets are delta-disjoint by the ingest contract) + the struct-min
-    * of the two first occurrences. */
-  def mergeChunkCounts(a: DataFrame, b: DataFrame): DataFrame = {
-    val cols = Seq("chunk_hash", "n_shingles", "occ", "n_docs", "fdoc", "fpos")
-      .map(col)
-    a.select(cols: _*).unionByName(b.select(cols: _*))
-      .groupBy(col("chunk_hash"), col("n_shingles"))
-      .agg(sum(col("occ")).as("occ"), sum(col("n_docs")).as("n_docs"),
-        min(struct(col("fdoc"), col("fpos"))).as("f"))
+  /** Exact merge of any number of [[cdcChunkAdd]] states: int64 count
+    * sums (doc sets are delta-disjoint by the ingest contract) + the
+    * struct-min of the first occurrences. */
+  def mergeChunkCounts(states: DataFrame*): DataFrame =
+    States.merge(states.map(_.withColumn("f", struct(col("fdoc"), col("fpos")))),
+        Seq("chunk_hash", "n_shingles"),
+        "occ" -> States.Sum, "n_docs" -> States.Sum, "f" -> States.Min)
       .select(col("chunk_hash"), col("n_shingles"), col("occ"),
         col("n_docs"), col("f.fdoc").as("fdoc"), col("f.fpos").as("fpos"))
-  }
 
   /** [[cdcDupChunks]] read off an EXTERNAL
     * [[cdcChunkAdd]]/[[mergeChunkCounts]] state instead of a fresh
@@ -2617,9 +2599,7 @@ object Text {
   /** Exact merge of [[ngramAdd]] states: per-(ctx, w) int64 sums —
     * associative and order-free. */
   def mergeNgrams(states: DataFrame*): DataFrame =
-    states.map(_.select(col("ctx"), col("w"), col("cnt")))
-      .reduce(_ unionByName _)
-      .groupBy(col("ctx"), col("w")).agg(sum(col("cnt")).as("cnt"))
+    States.merge(states, Seq("ctx", "w"), "cnt" -> States.Sum)
 
   /** Count-threshold pruning of an [[ngramAdd]]/[[mergeNgrams]] state —
     * the KenLM/CCNet discipline that keeps the broadcast model BOUNDED
@@ -2730,9 +2710,7 @@ object Text {
 
   /** Exact merge of [[trigramLmAdd]] states: per-key int64 sums. */
   def mergeTrigramLm(states: DataFrame*): DataFrame =
-    states.map(_.select(col("c2"), col("c1"), col("w"), col("cnt")))
-      .reduce(_ unionByName _)
-      .groupBy(col("c2"), col("c1"), col("w")).agg(sum(col("cnt")).as("cnt"))
+    States.merge(states, Seq("c2", "c1", "w"), "cnt" -> States.Sum)
 
   /** Shared surprisal tail: per-event exact-rational odds `(a, b)` with
     * `a ≥ b ≥ 1` → integer bits `floor(log2(a/b))` via the bit-length

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.States
+
 /** Web-curation operators: URL parsing / canonicalization / dedup /
   * registered-domain extraction, and HTML boilerplate stripping with a
   * link-density screen. The reference (dbt-SQL credit marts,
@@ -174,12 +176,10 @@ object Web {
       .groupBy(col("canon_url"), col("url"))
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("m"))
 
-  /** Exact merge of [[urlDedupAdd]] states: per-variant integer sums
-    * and min survivorship. */
+  /** Exact merge of any number of [[urlDedupAdd]] states: per-variant
+    * integer sums and min survivorship. */
   def mergeUrlStates(states: DataFrame*): DataFrame =
-    states.reduce(_ unionByName _)
-      .groupBy(col("canon_url"), col("url"))
-      .agg(sum(col("n")).as("n"), min(col("m")).as("m"))
+    States.merge(states, Seq("canon_url", "url"), "n" -> States.Sum, "m" -> States.Min)
 
   /** Group read off a maintained state — the second level of
     * [[urlDupGroups]]' nested aggregation, so batch ≡ FromState(Add)

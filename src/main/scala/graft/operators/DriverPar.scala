@@ -1,6 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, Executors}
+import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, Executors,
+  TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
@@ -37,23 +39,43 @@ object DriverPar {
     * executors can flip it off without a rebuild). */
   private lazy val disabled = sys.env.contains("SPARK_GRAFT_NO_PAR")
 
+  /** How long a failed `b` waits for `a` after cancelling its jobs. */
+  private val CancelWaitMs = 30000L
+  private val calls = new AtomicLong()
+
+  /** `a` still ran [[CancelWaitMs]] after `b` failed; `b`'s exception is the cause. */
+  final class CancelTimeoutException(tag: String, cause: Throwable) extends RuntimeException(
+    s"par2: b failed and a (job tag $tag) did not stop within $CancelWaitMs ms", cause)
+
   /** Run `a` on the pool while `b` runs on the calling thread; return
     * both. `a` runs under the caller's Spark local properties (job
     * group, job tags) and active session as they are at the call, so
     * its jobs answer to the caller's `cancelJobGroup`. Same failure
     * surface as sequential code: `par2` returns or throws only after
     * `a` has finished, so none of `a`'s Spark jobs or checkpoints
-    * outlive the call. A failure of `a` alone propagates; when `b`
-    * fails, its exception is rethrown once `a` is done, with `a`'s
-    * failure, if any, attached as suppressed. */
+    * outlive the call. A failure of `a` alone propagates. When `b`
+    * fails, `a`'s jobs (under a per-call job tag) are cancelled with
+    * their tasks interrupted, and `b`'s exception is rethrown once `a`
+    * is done, with `a`'s failure, if any, attached as suppressed — or
+    * a [[CancelTimeoutException]] if `a` outlives [[CancelWaitMs]]. */
   def par2[A, B](a: => A, b: => B): (A, B) = {
     if (disabled) { val av = a; (av, b) }
     else {
-      val fa = submit(a)
+      val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      val tag = s"graft-par2-${calls.incrementAndGet()}"
+      val fa = submit(session, tag, a)
       val bv =
         try b
         catch {
           case NonFatal(e) =>
+            // cancel until `a` stops: it may start a new job after a cancel
+            val deadline = System.nanoTime() + CancelWaitMs * 1000000L
+            while (!fa.isDone && System.nanoTime() < deadline) {
+              session.foreach(_.sparkContext.cancelJobsWithTag(tag))
+              try fa.get(100, TimeUnit.MILLISECONDS)
+              catch { case _: TimeoutException | _: ExecutionException => () }
+            }
+            if (!fa.isDone) throw new CancelTimeoutException(tag, e)
             try await(fa) catch { case NonFatal(ea) => if (ea ne e) e.addSuppressed(ea) }
             throw e
         }
@@ -62,11 +84,16 @@ object DriverPar {
   }
 
   /** A pool thread inherits Spark's local properties when it is CREATED
-    * and keeps them across reuse, so they are captured per task, as
-    * Spark's own broadcast pools do. Without a session there is none. */
-  private def submit[A](a: => A): CompletableFuture[A] =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) => SQLExecution.withThreadLocalCaptured(s, pool)(a)
+    * and keeps them across reuse, so they are captured per task (and
+    * tagged there), as Spark's own broadcast pools do. Without a
+    * session there is none. */
+  private def submit[A](session: Option[SparkSession], tag: String, a: => A) =
+    session match {
+      case Some(s) => SQLExecution.withThreadLocalCaptured(s, pool) {
+        s.sparkContext.addJobTag(tag)
+        s.sparkContext.setInterruptOnCancel(true)
+        a
+      }
       case None => CompletableFuture.supplyAsync(() => a, pool)
     }
 

@@ -76,12 +76,10 @@ object Hll {
       .groupBy(col("bucket")).agg(max(col("rho")).as("rho_max"))
   }
 
-  /** Exact merge of two register states: per-bucket MAX — idempotent,
-    * so it tolerates overlapping deltas and replays. */
-  def mergeHll(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("bucket"), col("rho_max"))
-      .unionByName(b.select(col("bucket"), col("rho_max")))
-      .groupBy(col("bucket")).agg(max(col("rho_max")).as("rho_max"))
+  /** Exact merge of any number of register states: per-bucket MAX —
+    * idempotent, so it tolerates overlapping deltas and replays. */
+  def mergeHll(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("bucket"), "rho_max" -> States.Max)
 
   /** The raw HLL estimate off a register state: `α·m²·2³² / S` with
     * S = Σ 2^(32−M_j) (absent buckets contribute 2³²). One row:
@@ -119,12 +117,10 @@ object Hll {
       .groupBy(col("key"), col("bucket")).agg(max(col("rho")).as("rho_max"))
   }
 
-  /** Exact merge of two grouped states: per-(key, bucket) MAX —
-    * idempotent like [[mergeHll]]. */
-  def mergeHllBy(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("key"), col("bucket"), col("rho_max"))
-      .unionByName(b.select(col("key"), col("bucket"), col("rho_max")))
-      .groupBy(col("key"), col("bucket")).agg(max(col("rho_max")).as("rho_max"))
+  /** Exact merge of any number of grouped states: per-(key, bucket)
+    * MAX — idempotent like [[mergeHll]]. */
+  def mergeHllBy(states: DataFrame*): DataFrame =
+    States.merge(states, Seq("key", "bucket"), "rho_max" -> States.Max)
 
   /** Per-key raw estimates off a grouped register state — one bounded
     * aggregation over ≤ keys·[[M]] rows. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ext.{MinHash, Multimodal, Text}
+import graft.operators.States
 
 /** Registrations for the second wave of LLM-pipeline operators:
   * MinHash+LSH near-dup, SimHash sketches, regex tokenization, and the
@@ -22,13 +23,11 @@ object ExtRegistry {
     * inline. */
   private def webKeeplistFromStates(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents
-    val urlState = graft.ext.Web.mergeUrlStates(
-      (0 to 2).map(i => graft.ext.Web.urlDedupAdd(
-        graft.ext.Web.urlTable(docs.filter(col("doc_id") % 3 === i)))): _*)
+    val urlState = graft.ext.Web.mergeUrlStates(States.deltas(docs, "doc_id", 3)
+      .map(d => graft.ext.Web.urlDedupAdd(graft.ext.Web.urlTable(d))): _*)
     val w = Text.hashWeights(docs)
     val marginState = Text.mergeMargins(
-      Text.marginAdd(docs.filter(col("doc_id") % 2 <=> 0), w),
-      Text.marginAdd(docs.filter(!(col("doc_id") % 2 <=> 0)), w))
+      States.deltas(docs, "doc_id", 2).map(Text.marginAdd(_, w)): _*)
     graft.ext.Web.webCurationKeeplistFromState(docs, urlState,
       Text.qualityMarginFromCounts(docs, marginState, 0L)
         .select(col("doc_id"), col("margin")), repThr = -175L)
@@ -46,8 +45,7 @@ object ExtRegistry {
     "minhash_near_dup_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = MinHash.mergeMinhash(
-        (0 to 2).map(i =>
-          MinHash.minhashAdd(docs.filter(col("doc_id") % 3 === i), 3)): _*)
+        States.deltas(docs, "doc_id", 3).map(MinHash.minhashAdd(_, 3)): _*)
       MinHash.nearDupPairsFromState(state)
     }),
 
@@ -97,8 +95,7 @@ object ExtRegistry {
     "simhash_near_dup_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = MinHash.mergeSimhash(
-        MinHash.simhashAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        MinHash.simhashAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(MinHash.simhashAdd): _*)
       MinHash.simHashNearDupsFromState(state)
     }),
 
@@ -221,12 +218,9 @@ object ExtRegistry {
     "curation_pipeline_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val w = graft.ext.Text.hashWeights(docs)
-      val even = docs.filter(col("doc_id") % 2 <=> 0)
-      val odd = docs.filter(!(col("doc_id") % 2 <=> 0))
-      val trig = graft.ext.Text.mergeTrigrams(
-        graft.ext.Text.trigramAdd(even), graft.ext.Text.trigramAdd(odd))
-      val marg = graft.ext.Text.mergeMargins(
-        graft.ext.Text.marginAdd(even, w), graft.ext.Text.marginAdd(odd, w))
+      val ds = States.deltas(docs, "doc_id", 2)
+      val trig = graft.ext.Text.mergeTrigrams(ds.map(graft.ext.Text.trigramAdd): _*)
+      val marg = graft.ext.Text.mergeMargins(ds.map(graft.ext.Text.marginAdd(_, w)): _*)
       graft.ext.Corpus.curationPipelineFromStates(docs, trig, marg, k = 40)
     }),
 
@@ -246,13 +240,10 @@ object ExtRegistry {
     "curation_pipeline_confident_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val w = graft.ext.Text.hashWeights(docs)
-      val even = docs.filter(col("doc_id") % 2 <=> 0)
-      val odd = docs.filter(!(col("doc_id") % 2 <=> 0))
+      val ds = States.deltas(docs, "doc_id", 2)
       graft.ext.Corpus.curationPipelineConfidentFromStates(docs,
-        graft.ext.Text.mergeTrigrams(
-          graft.ext.Text.trigramAdd(even), graft.ext.Text.trigramAdd(odd)),
-        graft.ext.Text.mergeMargins(
-          graft.ext.Text.marginAdd(even, w), graft.ext.Text.marginAdd(odd, w)),
+        graft.ext.Text.mergeTrigrams(ds.map(graft.ext.Text.trigramAdd): _*),
+        graft.ext.Text.mergeMargins(ds.map(graft.ext.Text.marginAdd(_, w)): _*),
         k = 40, minMargin = 25L)
     }),
 
@@ -397,11 +388,9 @@ object ExtRegistry {
     // oracle verbatim
     "image_phash_near_dups_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      def m(p: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        graft.ext.Multimodal.phashAdd(
-          graft.ext.Multimodal.encodePng(docs.filter(p(col("doc_id")))))
       graft.ext.Multimodal.phashNearDupsFromState(
-        graft.ext.Multimodal.mergePhash(m(_ % 2 === 0), m(_ % 2 === 1)), 3)
+        graft.ext.Multimodal.mergePhash(States.deltas(docs, "doc_id", 2)
+          .map(d => graft.ext.Multimodal.phashAdd(graft.ext.Multimodal.encodePng(d))): _*), 3)
     }),
 
     // incremental image dedup of ONE delta against state ∪ delta
@@ -482,10 +471,9 @@ object ExtRegistry {
     // pass and the oracle is the multimodal_png twin verbatim (the
     // foreachBatch MemoryStream twin is pinned in ExtSpec)
     "multimodal_png_stream" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      def half(p: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        Multimodal.decodePng(Multimodal.encodePng(docs.filter(p(col("doc_id"))))).toDF()
-      half(_ % 2 <=> 0).unionByName(half(c => !(c % 2 <=> 0)))
+      States.deltas(Tables(s, dir).documents, "doc_id", 2)
+        .map(d => Multimodal.decodePng(Multimodal.encodePng(d)).toDF())
+        .reduce(_ unionByName _)
     }),
 
     // keep-best at CHUNK granularity — the storage-dedup decision a
@@ -648,9 +636,8 @@ object ExtRegistry {
     // composition contract applied to exact-substring dedup)
     "dup_spans_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      val merged = graft.ext.Text.mergeShingleCounts(
-        graft.ext.Text.shingleCountAdd(docs.filter(col("doc_id") % 2 <=> 0), n = 3),
-        graft.ext.Text.shingleCountAdd(docs.filter(!(col("doc_id") % 2 <=> 0)), n = 3))
+      val merged = graft.ext.Text.mergeShingleCounts(States.deltas(docs, "doc_id", 2)
+        .map(graft.ext.Text.shingleCountAdd(_, n = 3)): _*)
       graft.ext.Text.duplicateSpansFromCounts(docs, merged, n = 3,
         minOccurrences = 2L)
     }),
@@ -670,14 +657,8 @@ object ExtRegistry {
     // the single-pass cut, so the oracle is the cut twin verbatim
     "dup_spans_cut_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      // null-SAFE split (<=> and its negation PARTITION the corpus even
-      // if a doc_id were null — a % predicate would drop nulls from BOTH
-      // deltas and silently break the bit-identity with the twin)
-      val even = docs.filter(col("doc_id") % 2 <=> 0)
-      val odd = docs.filter(!(col("doc_id") % 2 <=> 0))
-      val state = graft.ext.Text.mergeShingleFirsts(
-        graft.ext.Text.shingleFirstAdd(even, n = 3),
-        graft.ext.Text.shingleFirstAdd(odd, n = 3))
+      val state = graft.ext.Text.mergeShingleFirsts(States.deltas(docs, "doc_id", 2)
+        .map(graft.ext.Text.shingleFirstAdd(_, n = 3)): _*)
       graft.ext.Text.cutDuplicateSpansFromCounts(docs, state, n = 3)
     }),
 
@@ -717,9 +698,8 @@ object ExtRegistry {
     "near_dup_winnow_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       graft.ext.Text.fingerprintNearDupsFromState(
-        graft.ext.Text.mergeFingerprints(
-          (0 to 2).map(k => graft.ext.Text.fingerprintAdd(
-            docs.filter(col("doc_id") % 3 === k), n = 3, w = 4)): _*))
+        graft.ext.Text.mergeFingerprints(States.deltas(docs, "doc_id", 3)
+          .map(graft.ext.Text.fingerprintAdd(_, n = 3, w = 4)): _*))
     }),
 
     // exact-span verification off the same merged state: candidates
@@ -729,9 +709,8 @@ object ExtRegistry {
     "dup_spans_exact_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       graft.ext.Text.exactDupSpansFromState(docs,
-        graft.ext.Text.mergeFingerprints(
-          (0 to 2).map(k => graft.ext.Text.fingerprintAdd(
-            docs.filter(col("doc_id") % 3 === k), n = 3, w = 4)): _*),
+        graft.ext.Text.mergeFingerprints(States.deltas(docs, "doc_id", 3)
+          .map(graft.ext.Text.fingerprintAdd(_, n = 3, w = 4)): _*),
         window = 32)
     }),
 
@@ -767,9 +746,8 @@ object ExtRegistry {
     "near_dup_edit_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       graft.ext.Text.editDistancePairsFromState(docs,
-        graft.ext.Text.mergeFingerprints(
-          (0 to 2).map(k => graft.ext.Text.fingerprintAdd(
-            docs.filter(col("doc_id") % 3 === k), n = 3, w = 4)): _*),
+        graft.ext.Text.mergeFingerprints(States.deltas(docs, "doc_id", 3)
+          .map(graft.ext.Text.fingerprintAdd(_, n = 3, w = 4)): _*),
         maxDist = 16)
     }),
 
@@ -799,12 +777,8 @@ object ExtRegistry {
     // cdc_dup_chunks twin verbatim
     "cdc_dup_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      // null-safe split, same rationale as dup_spans_cut_stream
-      val state = graft.ext.Text.mergeChunkCounts(
-        graft.ext.Text.cdcChunkAdd(docs.filter(col("doc_id") % 2 <=> 0),
-          n = 3, divisor = 32L),
-        graft.ext.Text.cdcChunkAdd(docs.filter(!(col("doc_id") % 2 <=> 0)),
-          n = 3, divisor = 32L))
+      val state = graft.ext.Text.mergeChunkCounts(States.deltas(docs, "doc_id", 2)
+        .map(graft.ext.Text.cdcChunkAdd(_, n = 3, divisor = 32L)): _*)
       graft.ext.Text.cdcDupChunksFromCounts(state)
     }),
 
@@ -853,8 +827,7 @@ object ExtRegistry {
     "lm_perplexity_backoff_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val st = graft.ext.Text.mergeTrigramLm(
-        (0 to 2).map(k => graft.ext.Text.trigramLmAdd(
-          docs.filter(col("doc_id") % 3 === k))): _*)
+        States.deltas(docs, "doc_id", 3).map(graft.ext.Text.trigramLmAdd): _*)
       graft.ext.Text.lmPerplexityBackoffFromCounts(docs, st,
         min3 = 2L, min2 = 2L, min1 = 1L)
     }),
@@ -869,8 +842,7 @@ object ExtRegistry {
     "lm_perplexity_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = graft.ext.Text.mergeNgrams(
-        (0 to 2).map(i =>
-          graft.ext.Text.ngramAdd(docs.filter(col("doc_id") % 3 === i))): _*)
+        States.deltas(docs, "doc_id", 3).map(graft.ext.Text.ngramAdd): _*)
       graft.ext.Text.lmPerplexityFromCounts(docs, state)
     }),
 
@@ -903,10 +875,8 @@ object ExtRegistry {
     "quality_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val w = graft.ext.Text.hashWeights(docs)
-      // null-safe split, same rationale as dup_spans_cut_stream
       val state = graft.ext.Text.mergeMargins(
-        graft.ext.Text.marginAdd(docs.filter(col("doc_id") % 2 <=> 0), w),
-        graft.ext.Text.marginAdd(docs.filter(!(col("doc_id") % 2 <=> 0)), w))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.marginAdd(_, w)): _*)
       graft.ext.Text.qualityMarginFromCounts(docs, state, threshold = 0L)
     }),
 
@@ -946,8 +916,7 @@ object ExtRegistry {
     "lang_id_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = graft.ext.Text.mergeTrigrams(
-        graft.ext.Text.trigramAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.trigramAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.trigramAdd): _*)
       graft.ext.Text.languageId(docs,
         graft.ext.Text.langProfilesFromCounts(state, k = 40), k = 40)
     }),
@@ -1003,8 +972,7 @@ object ExtRegistry {
     "unigram_train_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = graft.ext.Text.mergeWordFreqs(
-        graft.ext.Text.wordFreqAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.wordFreqAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.wordFreqAdd): _*)
       graft.ext.Text.unigramTrainFromCounts(state, vocabMulti = 24, rounds = 2)
     }),
 
@@ -1051,10 +1019,8 @@ object ExtRegistry {
     // to the direct scan, so the oracle is the batched twin verbatim
     "bpe_train_merges_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      // null-safe split, same rationale as dup_spans_cut_stream
       val state = graft.ext.Text.mergeWordFreqs(
-        graft.ext.Text.wordFreqAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.wordFreqAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.wordFreqAdd): _*)
       graft.ext.Text.bpeTrainMergesBatchedFromCounts(state, rounds = 3, batch = 8)
     }),
 
@@ -1086,8 +1052,7 @@ object ExtRegistry {
     "wordpiece_train_merges_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = graft.ext.Text.mergeWordFreqs(
-        graft.ext.Text.wordFreqAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.wordFreqAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.wordFreqAdd): _*)
       graft.ext.Text.wordpieceTrainMergesFromCounts(state, merges = 6)
     }),
 
@@ -1162,8 +1127,7 @@ object ExtRegistry {
     "byte_bpe_train_stream" -> ((s, dir) => {
       val docs = graft.ext.Text.utf8Dirty(Tables(s, dir).documents)
       val state = graft.ext.Text.mergeWordFreqs(
-        graft.ext.Text.wordFreqAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.wordFreqAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.wordFreqAdd): _*)
       graft.ext.Text.byteBpeTrainMergesFromCounts(state, rounds = 3, batch = 8)
     }),
 
@@ -1204,22 +1168,19 @@ object ExtRegistry {
     // index, three read sides, each bit-identical to its single pass
     "tfidf_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      val even = docs.filter(col("doc_id") % 2 <=> 0)
-      val odd = docs.filter(!(col("doc_id") % 2 <=> 0))
       val state = graft.ext.Text.mergePostings(
-        graft.ext.Text.postingsAdd(even), graft.ext.Text.postingsAdd(odd))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.postingsAdd): _*)
       // nDocs rides beside the state as the ingest's doc counter; the
-      // two filtered views partition the table, so ONE base count is
-      // the counter's merged value (two eager filtered scans would
-      // measure the same number twice as slowly)
+      // deltas partition the table, so ONE base count is the counter's
+      // merged value (two eager filtered scans would measure the same
+      // number twice as slowly)
       graft.ext.Text.tfIdfTopTermsFromCounts(state, nDocs = docs.count(), k = 3)
     }),
 
     "inverted_index_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
       val state = graft.ext.Text.mergePostings(
-        graft.ext.Text.postingsAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.postingsAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.postingsAdd): _*)
       graft.ext.Text.invertedIndexFromCounts(state, maxPostings = 20)
     }),
 
@@ -1230,10 +1191,8 @@ object ExtRegistry {
     // oracle is the bm25_top_docs twin verbatim
     "bm25_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      // null-safe split, same rationale as dup_spans_cut_stream
       val state = graft.ext.Text.mergePostings(
-        graft.ext.Text.postingsAdd(docs.filter(col("doc_id") % 2 <=> 0)),
-        graft.ext.Text.postingsAdd(docs.filter(!(col("doc_id") % 2 <=> 0))))
+        States.deltas(docs, "doc_id", 2).map(graft.ext.Text.postingsAdd): _*)
       graft.ext.Text.bm25TopDocsFromCounts(state,
         Seq("hash", "join", "vector", "window"), k = 20)
     }),
@@ -1497,8 +1456,8 @@ object ExtRegistry {
         sampleMod = KmSampleMod)),
 
     // incremental index maintenance (FAISS add()): the quantizer trains
-    // ONCE on the residue class, then the corpus arrives as TWO delta
-    // frames (even/odd vec_ids) encoded independently against the
+    // ONCE on the residue class, then the corpus arrives as TWO
+    // States.deltas frames encoded independently against the
     // shipped state and merged exactly — the result must hash-match the
     // single-pass full encode (the shared oracle), proving
     // add(A) ∪ add(B) ≡ encode(A ∪ B) at a fixed quantizer
@@ -1508,9 +1467,8 @@ object ExtRegistry {
         emb.filter(col("vec_id") % KmSampleMod === 0), k = KmK, iters = KmIters)
       graft.ext.Cluster.sampledGridScale(emb, KmSampleMod) match {
         case Some(scale) =>
-          graft.ext.Cluster.mergeOccupancy(
-            graft.ext.Cluster.indexAdd(emb.filter(col("vec_id") % 2 <=> 0), cen, scale),
-            graft.ext.Cluster.indexAdd(emb.filter(!(col("vec_id") % 2 <=> 0)), cen, scale))
+          graft.ext.Cluster.mergeOccupancy(States.deltas(emb, "vec_id", 2)
+            .map(graft.ext.Cluster.indexAdd(_, cen, scale)): _*)
         case None => cen // empty/all-zero corpus: both sides degrade empty
       }
     }),
@@ -1544,9 +1502,8 @@ object ExtRegistry {
         emb.filter(col("vec_id") % KmSampleMod === 0), k = KmK, iters = KmIters)
       graft.ext.Cluster.sampledGridScale(emb, KmSampleMod) match {
         case Some(scale) =>
-          val state = graft.ext.Cluster.mergeOccupancy(
-            graft.ext.Cluster.indexAdd(emb.filter(col("vec_id") % 2 <=> 0), cen, scale),
-            graft.ext.Cluster.indexAdd(emb.filter(!(col("vec_id") % 2 <=> 0)), cen, scale))
+          val state = graft.ext.Cluster.mergeOccupancy(States.deltas(emb, "vec_id", 2)
+            .map(graft.ext.Cluster.indexAdd(_, cen, scale)): _*)
           graft.ext.Sim.ivfTopKTrained(emb, state, k = 5, nProbe = 2,
             gridScale = Some(scale))
         case None => // empty/all-zero corpus: the search degrades empty
@@ -1633,11 +1590,8 @@ object ExtRegistry {
     // pass, oracle shared verbatim
     "hll_by_type_stream" -> ((s, dir) => {
       val ev = Tables(s, dir).events
-      val state = graft.operators.Hll.mergeHllBy(
-        graft.operators.Hll.hllAddBy(ev.filter(col("event_id") % 2 <=> 0),
-          "event_type", "event_id"),
-        graft.operators.Hll.hllAddBy(ev.filter(!(col("event_id") % 2 <=> 0)),
-          "event_type", "event_id"))
+      val state = graft.operators.Hll.mergeHllBy(States.deltas(ev, "event_id", 2)
+        .map(graft.operators.Hll.hllAddBy(_, "event_type", "event_id")): _*)
       graft.operators.Hll.hllEstimateByFromCounts(state)
         .join(ev.groupBy(col("event_type").as("key"))
           .agg(countDistinct(col("event_id")).as("exact_distinct")), Seq("key"))
@@ -1659,11 +1613,8 @@ object ExtRegistry {
     // move a register; bit-identical to the single pass, oracle shared
     "hll_daily_profile_stream" -> ((s, dir) => {
       val ev = Tables(s, dir).events
-      val state = graft.operators.Hll.mergeHllBy(
-        graft.dq.Profile.hllDailyAdd(ev.filter(col("event_id") % 2 <=> 0),
-          "event_type", "ts", "user_id"),
-        graft.dq.Profile.hllDailyAdd(ev.filter(!(col("event_id") % 2 <=> 0)),
-          "event_type", "ts", "user_id"))
+      val state = graft.operators.Hll.mergeHllBy(States.deltas(ev, "event_id", 2)
+        .map(graft.dq.Profile.hllDailyAdd(_, "event_type", "ts", "user_id")): _*)
       graft.dq.Profile.hllDailyFromCounts(state, ev,
         "event_type", "ts", "user_id")
     }),
@@ -1675,8 +1626,7 @@ object ExtRegistry {
     "hll_distinct_stream" -> ((s, dir) => {
       val ev = Tables(s, dir).events
       val state = graft.operators.Hll.mergeHll(
-        graft.operators.Hll.hllAdd(ev.filter(col("event_id") % 2 <=> 0), "event_id"),
-        graft.operators.Hll.hllAdd(ev.filter(!(col("event_id") % 2 <=> 0)), "event_id"))
+        States.deltas(ev, "event_id", 2).map(graft.operators.Hll.hllAdd(_, "event_id")): _*)
       graft.operators.Hll.hllEstimateFromCounts(state)
         .crossJoin(ev.agg(countDistinct(col("event_id")).as("exact_distinct")))
         .select(col("m"), col("used_registers"), col("raw_estimate"),
@@ -2002,10 +1952,8 @@ object ExtRegistry {
     // one-delta batch twin (same oracle)
     "quality_drift_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      val deltas = (0 to 2).map(i =>
-        graft.ext.Corpus.driftAdd(docs.filter(col("doc_id") % 3 === i)))
-      graft.ext.Corpus.driftReport(
-        graft.ext.Corpus.mergeDriftStates(deltas: _*))
+      graft.ext.Corpus.driftReport(graft.ext.Corpus.mergeDriftStates(
+        States.deltas(docs, "doc_id", 3).map(graft.ext.Corpus.driftAdd): _*))
     }),
 
     // URL dedup off a MERGED three-delta ingest (urlDedupAdd per delta,
@@ -2014,10 +1962,9 @@ object ExtRegistry {
     // so the oracle is url_dup_groups verbatim
     "url_dedup_stream" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      val deltas = (0 to 2).map(i => graft.ext.Web.urlDedupAdd(
-        graft.ext.Web.urlTable(docs.filter(col("doc_id") % 3 === i))))
-      graft.ext.Web.urlDupGroupsFromState(
-        graft.ext.Web.mergeUrlStates(deltas: _*))
+      graft.ext.Web.urlDupGroupsFromState(graft.ext.Web.mergeUrlStates(
+        States.deltas(docs, "doc_id", 3)
+          .map(d => graft.ext.Web.urlDedupAdd(graft.ext.Web.urlTable(d))): _*))
     }),
 
     // domain-reputation screen: the per-doc quality margin aggregated
@@ -2289,10 +2236,9 @@ object ExtRegistry {
       val docs = Tables(s, dir).documents.select(col("doc_id"))
       val media = graft.ext.Multimodal.encodeAudioTones(docs)
         .unionByName(graft.ext.Multimodal.encodeAudioTones(docs, variant = true))
-      def add(k: Long) = graft.ext.Multimodal.audioSketchAdd(
-        media.filter(m => m.doc_id % 2 == k))
       graft.ext.Multimodal.audioNearDupsFromState(
-        graft.ext.Multimodal.mergeAudioSketch(add(0L), add(1L)), 3)
+        graft.ext.Multimodal.mergeAudioSketch(States.deltas(media, "doc_id", 2)
+          .map(graft.ext.Multimodal.audioSketchAdd): _*), 3)
     }),
 
     // incremental clip dedup of ONE delta against state ∪ delta

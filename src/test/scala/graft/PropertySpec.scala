@@ -815,4 +815,135 @@ class PropertySpec extends SparkSpec {
       assert(r.getLong(1) <= r.getLong(2),
         s"doc ${r.getLong(0)}: unigram tokens exceed the char baseline") }
   }
+
+  test("property: States.deltas partitions any key column exactly, nulls into the last delta") {
+    import graft.operators.States
+    val keys: Seq[Option[Long]] = sample(Gen.oneOf(Gen.chooseNum(-50L, 50L),
+      Gen.oneOf(0L, Long.MaxValue, Long.MinValue, -1L)).map(Option(_)), 60) ++
+      Seq(None, None, Some(0L), Some(-3L))
+    val df = keys.zipWithIndex.map { case (k, i) => (i, k) }.toDF("row", "k")
+    for (n <- 1 to 5) {
+      val ds = States.deltas(df, "k", n)
+      assert(ds.size == n)
+      val got = ds.zipWithIndex.flatMap { case (d, i) =>
+        d.collect().map(r => r.getInt(0) -> i) }
+      assert(got.map(_._1).sorted == keys.indices, s"n=$n: rows lost or repeated")
+      got.foreach { case (row, i) =>
+        val want = keys(row).fold(n - 1)(k => Math.floorMod(k, n.toLong).toInt)
+        assert(i == want, s"n=$n: key ${keys(row)} in delta $i, want $want")
+      }
+    }
+    // the `% n === i` spelling the deltas replace loses the null and
+    // negative keys
+    assert((0 until 3).map(i => df.filter(col("k") % 3 === i).count()).sum < keys.size)
+    // typed: the deltas of a Dataset keep its element type
+    val media = graft.ext.Multimodal.encodeAudioTones(spark.range(7L).toDF("doc_id"))
+    val parts: Seq[org.apache.spark.sql.Dataset[graft.ext.Multimodal.EncodedMedia]] =
+      States.deltas(media, "doc_id", 3)
+    assert(parts.flatMap(_.collect().map(_.doc_id)).sorted == (0L until 7L))
+  }
+
+  test("property: every add/merge family merges random doc-disjoint deltas to add(whole)") {
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import graft.ext.{Cluster, Corpus, MinHash, Multimodal, Sim, Text, Web}
+    import graft.operators.Hll
+
+    // a random corpus over a small vocabulary, so every state key recurs
+    // across documents and a merge has something to fold
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val docs = sample(for {
+      n <- Gen.chooseNum(0, 16); ws <- Gen.listOfN(n, Gen.oneOf(words))
+      lang <- Gen.oneOf("en", "de", "fr"); src <- Gen.oneOf("s1", "s2")
+      nChars <- Gen.chooseNum(0L, 600L)
+    } yield (lang, src, nChars, ws.mkString(" ")), 36).zipWithIndex.map {
+      case ((l, s, c, t), i) => (i.toLong * 5L + 2L, l, s, c, t)
+    }.toDF("doc_id", "lang", "source", "n_chars", "text")
+    val events = sample(for {
+      typ <- Gen.oneOf("click", "view", "buy"); day <- Gen.chooseNum(0L, 3L)
+      user <- Gen.chooseNum(0L, 40L)
+    } yield (typ, day * 86400000000000L + user * 1000L, user), 150).zipWithIndex.map {
+      case ((t, ts, u), i) => (i.toLong, t, ts, u)
+    }.toDF("event_id", "event_type", "ts", "user_id")
+    val emb = spark.range(60L).select(col("id").as("vec_id"),
+      expr("transform(sequence(1, 8), i -> " +
+        "CAST(pmod(id * 2654435761 + i * 40503, 1000003) / 1000003.0 - 0.5 AS FLOAT))")
+        .as("embedding"))
+    val cen = Cluster.kmeansCentroids(emb, k = 4, iters = 2)
+    val scale = Cluster.sampledGridScale(emb, 1).get
+    val w = Text.hashWeights(docs)
+    val png = Multimodal.encodePng(docs)
+    val audio = Multimodal.encodeAudioTones(docs)
+
+    // one family per add/merge pair; `idempotent` marks the max and
+    // first-wins merges, which must absorb a delta ingested twice
+    case class Family[T](name: String, input: Dataset[T], key: String)(
+        val add: Dataset[T] => DataFrame, val merge: Seq[DataFrame] => DataFrame,
+        val idempotent: Boolean = false)
+    val families: Seq[Family[_]] = Seq(
+      Family("postings", docs, "doc_id")(Text.postingsAdd, Text.mergePostings(_: _*)),
+      Family("shingleCounts", docs, "doc_id")(
+        Text.shingleCountAdd(_, 2), Text.mergeShingleCounts(_: _*)),
+      Family("shingleFirsts", docs, "doc_id")(
+        Text.shingleFirstAdd(_, 2), Text.mergeShingleFirsts(_: _*)),
+      Family("wordFreqs", docs, "doc_id")(Text.wordFreqAdd, Text.mergeWordFreqs(_: _*)),
+      Family("margins", docs, "doc_id")(Text.marginAdd(_, w), Text.mergeMargins(_: _*)),
+      Family("trigrams", docs, "doc_id")(Text.trigramAdd, Text.mergeTrigrams(_: _*)),
+      Family("fingerprints", docs, "doc_id")(
+        Text.fingerprintAdd(_, 2, 2), Text.mergeFingerprints(_: _*), idempotent = true),
+      Family("chunkCounts", docs, "doc_id")(
+        Text.cdcChunkAdd(_, 2, 4L), Text.mergeChunkCounts(_: _*)),
+      Family("ngrams", docs, "doc_id")(Text.ngramAdd, Text.mergeNgrams(_: _*)),
+      Family("trigramLm", docs, "doc_id")(Text.trigramLmAdd, Text.mergeTrigramLm(_: _*)),
+      Family("minhash", docs, "doc_id")(
+        MinHash.minhashAdd(_, 2), MinHash.mergeMinhash(_: _*), idempotent = true),
+      Family("simhash", docs, "doc_id")(
+        MinHash.simhashAdd, MinHash.mergeSimhash(_: _*), idempotent = true),
+      Family("urlStates", docs, "doc_id")(
+        d => Web.urlDedupAdd(Web.urlTable(d)), Web.mergeUrlStates(_: _*)),
+      Family("driftStates", docs, "doc_id")(Corpus.driftAdd, Corpus.mergeDriftStates(_: _*)),
+      Family("phash", png, "doc_id")(
+        Multimodal.phashAdd, Multimodal.mergePhash(_: _*), idempotent = true),
+      Family("audioSketch", audio, "doc_id")(
+        Multimodal.audioSketchAdd, Multimodal.mergeAudioSketch(_: _*), idempotent = true),
+      Family("hll", events, "event_id")(
+        Hll.hllAdd(_, "user_id"), Hll.mergeHll(_: _*), idempotent = true),
+      Family("hllBy", events, "event_id")(
+        Hll.hllAddBy(_, "event_type", "user_id"), Hll.mergeHllBy(_: _*), idempotent = true),
+      Family("hllDaily", events, "event_id")(
+        graft.dq.Profile.hllDailyAdd(_, "event_type", "ts", "user_id"),
+        Hll.mergeHllBy(_: _*), idempotent = true),
+      Family("occupancy", emb, "vec_id")(
+        Cluster.indexAdd(_, cen, scale), Cluster.mergeOccupancy(_: _*)),
+      Family("ivfIndex", emb, "vec_id")(
+        Sim.ivfIndexAdd(_, cen, scale), Sim.mergeIvfIndex(_: _*), idempotent = true))
+
+    def check[T](f: Family[T], rnd: scala.util.Random): Unit = {
+      val whole = f.add(f.input)
+      def rows(df: DataFrame) =
+        df.select(whole.columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val want = rows(whole)
+      assert(want.nonEmpty, s"${f.name}: empty state, nothing to check")
+      val keys = f.input.select(col(f.key)).collect().map(_.getLong(0)).distinct
+      // every key into one of 1-5 deltas at random; a delta may be empty
+      val n = 1 + rnd.nextInt(5)
+      val byDelta = keys.groupBy(_ => rnd.nextInt(n))
+      val states = rnd.shuffle((0 until n).map(i =>
+        f.add(f.input.filter(col(f.key).isin(byDelta.getOrElse(i, Array.empty[Long]): _*)))))
+      def tree(xs: Seq[DataFrame]): DataFrame =
+        if (xs.size == 1) f.merge(xs)
+        else { val (l, r) = xs.splitAt(xs.size / 2); f.merge(Seq(tree(l), tree(r))) }
+      val (grouping, merged) = rnd.nextInt(3) match {
+        case 0 => "left fold" -> states.reduceLeft((a, b) => f.merge(Seq(a, b)))
+        case 1 => "varargs" -> f.merge(states)
+        case _ => "tree" -> tree(states)
+      }
+      val what = s"${f.name}: $n deltas merged by $grouping"
+      assert(rows(merged) == want, s"$what differ from add(whole)")
+      if (f.idempotent)
+        assert(rows(f.merge(Seq(merged, states(rnd.nextInt(n))))) == want,
+          s"$what: a delta ingested twice moved the state")
+    }
+    val rnd = new scala.util.Random(42L)
+    for (_ <- 1 to 2; f <- families) check(f, rnd)
+  }
 }

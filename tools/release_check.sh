@@ -100,6 +100,11 @@ EOF
 echo "== 5/5 scale proof =="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" SPARK_DRIVER_MEM=16g \
   sbt -batch "runMain graft.ScaleProof" | grep scale_proof
+# heap headroom: the credit pipelines must also pass at 100x in a 5g heap;
+# the 4096 MB heap gate alone does not show how close a run is to failing
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" SPARK_DRIVER_MEM=5g \
+  SPARK_GRAFT_SCALE_ONLY='synth->nplMonthly,synth->transitions->rollRateMonthly,synth->transitions->cureRateMonthly' \
+  sbt -batch "runMain graft.ScaleProof" | grep scale_proof
 
 if [[ "${1:-}" == "--with-sf01" ]]; then
   echo "== extra: sf0.1 sweep =="
