@@ -17,7 +17,11 @@ import scala.collection.mutable
   *
   * Each query runs TWICE (fresh fn call each time, as Bench does); both
   * runs are reported — run 1 carries codegen/first-touch costs, run 2 is
-  * the steady state. */
+  * the steady state. A run drains the query's own physical plan
+  * ([[LocalSession.runToFinalPlan]]), so every projected column is
+  * computed: a `count()` would let Catalyst prune the columns it does
+  * not need (in `near_dup_edit` the whole `dist` DP). Next to the rows
+  * it prints the AQE-final plan's exchanges and reused exchanges. */
 object Profile {
 
   private final class JobTimes extends org.apache.spark.scheduler.SparkListener {
@@ -48,8 +52,11 @@ object Profile {
         val listener = new JobTimes
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
+        val (n, finalPlan) = LocalSession.runToFinalPlan(fn(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
+        val planLines = finalPlan.toString.linesIterator.toSeq
+        val reused = planLines.count(_.contains("ReusedExchange"))
+        val exchanges = planLines.count(_.contains("Exchange ")) - reused
         org.apache.spark.sql.graft.ListenerDrain.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
         val js = listener.jobs.values.toSeq
@@ -61,6 +68,7 @@ object Profile {
         val jobSum = ended.map(j => (j.t1 - j.t0) / 1e3).sum
         val unendedNote = if (unended.isEmpty) "" else s", ${unended.size} unended"
         println(f"== $name run $run: wall $wall%.3f s, rows $n, " +
+          s"exchanges $exchanges (reused $reused), " +
           f"${js.size} jobs (sum ${jobSum}%.3f s, gap ${wall - jobSum}%.3f s$unendedNote)")
         js.foreach { j =>
           val dur = if (j.t1 > 0L) f"${(j.t1 - j.t0) / 1e3}%7.3f s" else "running "

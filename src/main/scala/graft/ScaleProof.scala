@@ -763,11 +763,8 @@ object ScaleProof {
         val t0 = System.nanoTime()
         // the aggregate is a handful of (product_type, currency) rows —
         // this collect is the bounded result read, not a data move
-        val df = build()
-        val out = df.collect()
+        val out = build().collect()
         val sec = (System.nanoTime() - t0) / 1e9
-        if (sys.env.contains("SPARK_GRAFT_SKEW_DEBUG"))
-          println(s"=== $name final plan ===\n" + df.queryExecution.executedPlan)
         org.apache.spark.sql.graft.ListenerDrain.drain(spark.sparkContext)
         val tasks = listener.rows.asScala.toSeq
         val joinStage = tasks.groupBy(_._1).view.mapValues(_.map(_._3).sum)

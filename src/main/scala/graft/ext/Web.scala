@@ -153,7 +153,9 @@ object Web {
     * this pre-partitions on the canonical key and lets both nested
     * aggregations (per-variant, then per-page) reuse that
     * partitioning — the PlanSpec pin holds the plan to one exchange.
-    * Per-key variant counts are bounded by true duplication. */
+    * Per-key variant counts are bounded by true duplication. Not a
+    * read of [[urlDedupAdd]]: that state's own groupBy would add the
+    * second exchange the pinned one-exchange plan avoids. */
   def urlDupGroups(urls: DataFrame): DataFrame =
     urlNormalize(urls)
       .repartition(col("canon_url"))

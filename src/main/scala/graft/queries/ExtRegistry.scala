@@ -717,8 +717,9 @@ object ExtRegistry {
     // EXACT bounded edit-distance verification (the RETSim/dedup-funnel
     // verify step): for every winnow-candidate pair, the byte-level
     // Levenshtein distance between the full texts — exact when <= 16,
-    // NULL above (the Ukkonen k-band computes only |i-j| <= 16 cells,
-    // O(k·len) per pair, with the |len_a-len_b| > k pre-reject). The
+    // NULL above (Spark's thresholded levenshtein over the re-decoded
+    // bytes: a k-band, O(k·len) per pair, with the |len_a-len_b| > k
+    // pre-reject). The
     // fixture is bimodal (planted near-dups at dist <= ~8, unrelated
     // candidates >= ~96), so both verdict branches are live at every
     // tier

@@ -14,12 +14,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Longest common contiguous TOKEN run over two bounded token windows
-  * as a native Catalyst expression — [[EditDistanceBand]]'s discipline
-  * applied to the exact-substring span verifier (the Lee et al. 2021
-  * step behind `dup_spans_exact`): the rolling-row LCS-run DP has no
-  * built-in composition, and its first cut as a typed Dataset map
-  * walled the pair path behind Deserialize/Serialize (measured 6× of
-  * wall-clock on the edit-distance twin). As a plain column the
+  * as a native Catalyst expression, for the exact-substring span
+  * verifier (the Lee et al. 2021 step behind `dup_spans_exact`): the
+  * rolling-row LCS-run DP has no built-in composition (where the
+  * edit-distance verifier has Spark's `levenshtein`), and its first
+  * cut as a typed Dataset map walled the pair path behind
+  * Deserialize/Serialize (measured 6× of wall-clock on the
+  * edit-distance twin's typed first cut). As a plain column the
   * candidate join, the window slices and the DP verdict share one
   * whole-stage-codegen span.
   *

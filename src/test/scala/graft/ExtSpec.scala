@@ -1577,7 +1577,8 @@ class ExtSpec extends SparkSpec {
     // batched over the driver corpus: a round's picks are pairwise
     // symbol-disjoint (what makes their replaces order-independent)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (r1, _) = graft.ext.Text.bpeCoreBatched(docs, rounds = 1, batch = 8)
+    val vocab0 = graft.ext.Text.bpeVocabFromFreqs(graft.ext.Text.wordFreqAdd(docs))
+    val (r1, _) = graft.ext.Text.bpeCoreBatched(vocab0, rounds = 1, batch = 8)
     assert(r1.nonEmpty && r1.length <= 8)
     val symSets = r1.map(m => Set(m._2, m._3, m._4)).toIndexedSeq
     for (a <- symSets.indices; b <- a + 1 until symSets.length)
@@ -1587,7 +1588,7 @@ class ExtSpec extends SparkSpec {
     // still partition every word exactly, and every multi-char symbol
     // is the `merged` of an emitted row (no invented symbols — the
     // invariant the prefix-collision bug broke)
-    val (merges, vocab) = graft.ext.Text.bpeCoreBatched(docs, rounds = 4, batch = 8)
+    val (merges, vocab) = graft.ext.Text.bpeCoreBatched(vocab0, rounds = 4, batch = 8)
     assert(merges.map(_._1) == (1 to merges.length), "ranks not consecutive")
     assert(merges.length > 8, s"4 rounds yielded only ${merges.length} merges")
     val mergedSyms = merges.map(_._4).toSet

@@ -767,11 +767,12 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"), s"state-keyed shuffle join in:\n$plan")
   }
 
-  test("editDistancePairs: native codegen DP — no typed boundary, no cartesian on the pair path") {
+  test("editDistancePairs: built-in levenshtein verdict — no typed boundary, no cartesian on the pair path") {
     val df = graft.ext.Text.editDistancePairs(tables.documents, n = 3, w = 4, maxDist = 16)
     val plan = df.queryExecution.executedPlan.toString
-    // the whole point of the EditDistanceBand expression: the verdict
-    // is a plain column, so the pair path never leaves codegen
+    // the verdict is a plain built-in column, so the pair path never
+    // leaves codegen, and the -1 → NULL mapping runs the DP once
+    assert("levenshtein\\(".r.findAllIn(plan).size == 1, s"DP not evaluated once in:\n$plan")
     assert(!plan.contains("DeserializeToObject"), s"typed boundary in:\n$plan")
     assert(!plan.contains("SerializeFromObject"), s"typed boundary in:\n$plan")
     assert(!plan.contains("MapPartitions"), s"typed map in:\n$plan")

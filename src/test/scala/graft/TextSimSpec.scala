@@ -445,20 +445,52 @@ class TextSimSpec extends SparkSpec {
     assert(l.length == 1 && l.head.getLong(2) == 32L && l.head.getLong(3) == 1L)
   }
 
-  test("bandedEditDistance: exact within the band, -1 above, byte-level like the oracle") {
+  test("byteEditDistance: exact within k, NULL above k or on a NULL side, byte-level like the oracle") {
     import java.nio.charset.StandardCharsets.UTF_8
-    def d(a: String, b: String, k: Int) =
-      graft.ext.Text.bandedEditDistance(a.getBytes(UTF_8), b.getBytes(UTF_8), k)
-    assert(d("kitten", "sitting", 16) == 3) // the classic: 2 subs + 1 insert
-    assert(d("abc", "abc", 0) == 0)
-    assert(d("", "abc", 3) == 3 && d("", "abc", 2) == -1)
-    // é is TWO UTF-8 bytes: byte distance 2 where char distance is 1 —
-    // DuckDB levenshtein's semantics, which is why the DP runs on bytes
-    assert(d("héllo", "hello", 16) == 2)
-    // length-gap pre-reject: |la - lb| > k can never fit the band
-    assert(d("a" * 40, "a", 16) == -1)
-    // band-edge exactness: distance exactly k is still exact at k
-    assert(d("a" * 20, "b" * 20, 20) == 20 && d("a" * 20, "b" * 20, 19) == -1)
+    // the plain full-matrix DP over UTF-8 bytes — the oracle engine's
+    // byte-based levenshtein semantics
+    def full(a: String, b: String): Long = {
+      val x = a.getBytes(UTF_8); val y = b.getBytes(UTF_8)
+      val m = Array.tabulate(x.length + 1, y.length + 1)((i, j) => if (i == 0) j else i)
+      for (i <- 1 to x.length; j <- 1 to y.length)
+        m(i)(j) = math.min(m(i - 1)(j - 1) + (if (x(i - 1) == y(j - 1)) 0 else 1),
+          math.min(m(i - 1)(j), m(i)(j - 1)) + 1)
+      m(x.length)(y.length).toLong
+    }
+    // all cases of one k in one frame; spread over 2 partitions so the
+    // column runs in a codegen'd stage, not folded into a local relation
+    def dists(k: Int, pairs: Seq[(String, String)]): Seq[Option[Long]] =
+      pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
+        .repartition(2)
+        .select(col("i"), Text.byteEditDistance(col("a"), col("b"), k).as("d"))
+        .collect().sortBy(_.getInt(0))
+        .map(r => if (r.isNullAt(1)) None else Some(r.getLong(1))).toSeq
+    val cases: Seq[(Int, Seq[(String, String)])] = Seq(
+      16 -> Seq(("kitten", "sitting"), ("héllo", "hello"), ("a" * 40, "a"),
+        ("naïve café", "naive cafe"), ("日本語", "日本"), ("", "")),
+      0 -> Seq(("abc", "abc"), ("abc", "abd"), ("", ""), ("", "a"), ("é", "é")),
+      1 -> Seq(("é", "e"), ("e", "é"), ("ab", "ba")),
+      2 -> Seq(("é", "e"), ("", "ab"), ("", "abc"), ("abc", ""), ("ab", "ba")),
+      19 -> Seq(("a" * 20, "b" * 20)),
+      20 -> Seq(("a" * 20, "b" * 20), ("a" * 30, "a" * 9), ("a" * 30, "a" * 10)))
+    for ((k, pairs) <- cases) {
+      val want = pairs.map { case (a, b) => Some(full(a, b)).filter(_ <= k) }
+      assert(dists(k, pairs) == want, s"k = $k over $pairs")
+    }
+    // é is TWO UTF-8 bytes: byte distance 2 where char distance is 1
+    assert(dists(2, Seq(("é", "e"))) == Seq(Some(2L)))
+    assert(dists(1, Seq(("é", "e"))) == Seq(None))
+    // a distance of exactly k is exact; k + 1 is NULL
+    assert(dists(20, Seq(("a" * 20, "b" * 20))) == Seq(Some(20L)))
+    assert(dists(19, Seq(("a" * 20, "b" * 20))) == Seq(None))
+    // a length gap > k is NULL, even where the gap is the whole answer
+    assert(dists(20, Seq(("a" * 30, "a" * 9))) == Seq(None))
+    assert(dists(0, Seq(("", ""), ("", "a"))) == Seq(Some(0L), None))
+    // NULL on either side gives NULL
+    val nulls = Seq[(Option[String], Option[String])](
+      (None, Some("abc")), (Some("abc"), None), (None, None)).toDF("a", "b")
+      .select(Text.byteEditDistance(col("a"), col("b"), 16)).collect()
+    assert(nulls.forall(_.isNullAt(0)), nulls.toSeq.toString)
   }
 
   test("editDistancePairs: near pair exact, far candidate NULL, fromState merged == batch") {
