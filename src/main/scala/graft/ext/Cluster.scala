@@ -126,7 +126,10 @@ object Cluster {
     exactNsq(c).toDouble / (c.n * c.n).toDouble
 
   /** Expression-state view of a centroid set (cell, n as double,
-    * |s|²/n², component sums) for [[KMeansCells]]. */
+    * |s|²/n², component sums) for [[KMeansCells]] — coarse cells and
+    * (residual) codebooks alike, so every scorer path shares the 2⁵³
+    * guard: a cell whose |s|² exceeds it would silently round in the
+    * int64→double cast and break oracle bit-parity without an error. */
   private[ext] def exprState(cens: Seq[Centroid]): Seq[(Int, Double, Double, Seq[Long])] =
     cens.map(c => (c.cell, c.n.toDouble, nsqOverN2(c), c.s.toIndexedSeq))
 
@@ -268,10 +271,7 @@ object Cluster {
   def kmeansAssign(embeddings: DataFrame, k: Int = 8, iters: Int = 2): DataFrame =
     assignedFrame(embeddings, k, iters) match {
       case Some((assigned, _)) => assigned.select(col("vec_id"), col("cell"))
-      case None =>
-        val spark = embeddings.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vec_id", LongType), StructField("cell", IntegerType))))
+      case None => emptyAssign(embeddings)
     }
 
   /** The pre-maximin seeding (first k vectors by vec_id), kept ONLY as
@@ -282,10 +282,7 @@ object Cluster {
     quantized(embeddings) match {
       case Some((qf0, d)) =>
         lloydAssign(qf0, k, iters, d, maximin = false).select(col("vec_id"), col("cell"))
-      case None =>
-        val spark = embeddings.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vec_id", LongType), StructField("cell", IntegerType))))
+      case None => emptyAssign(embeddings)
     }
 
   /** ONE keyed aggregation from an assigned `(vec_id, q, cell)` frame to
@@ -302,13 +299,20 @@ object Cluster {
         (col("s").cast(DoubleType) / col("n").cast(DoubleType)).as("mean"))
   }
 
-  private def emptyLongForm(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("cell", IntegerType), StructField("dim", IntegerType),
-        StructField("s", LongType), StructField("n", LongType),
-        StructField("mean", DoubleType))))
-  }
+  private def emptyAssign(embeddings: DataFrame): DataFrame =
+    emptyFrame(embeddings.sparkSession,
+      StructField("vec_id", LongType), StructField("cell", IntegerType))
+
+  private def emptyLongForm(embeddings: DataFrame): DataFrame =
+    emptyFrame(embeddings.sparkSession, StructField("cell", IntegerType),
+      StructField("dim", IntegerType), StructField("s", LongType),
+      StructField("n", LongType), StructField("mean", DoubleType))
+
+  /** The empty per-subspace codebook long form. */
+  private def emptySubspaceLongForm(embeddings: DataFrame): DataFrame =
+    emptyFrame(embeddings.sparkSession, StructField("subspace", IntegerType),
+      StructField("cell", IntegerType), StructField("dim", IntegerType),
+      StructField("s", LongType), StructField("n", LongType), StructField("mean", DoubleType))
 
   /** Trained-centroid table in long form: one row per NON-EMPTY final
     * cell and dimension — exact component sum `s`, member count `n`, and
@@ -463,10 +467,8 @@ object Cluster {
           assigned.select(col("vec_id"), lit(s).cast(IntegerType).as("subspace"), col("cell"))
         }.reduce(_.unionByName(_))
       case None =>
-        val spark = embeddings.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vec_id", LongType),
-            StructField("subspace", IntegerType), StructField("cell", IntegerType))))
+        emptyFrame(embeddings.sparkSession, StructField("vec_id", LongType),
+          StructField("subspace", IntegerType), StructField("cell", IntegerType))
     }
 
   /** Per-subspace assigned q-slice frames (each `(vec_id, q, cell)` of
@@ -646,12 +648,7 @@ object Cluster {
             (col("pos") + 1).cast(IntegerType).as("dim"),
             col("s"), col("n"),
             (col("s").cast(DoubleType) / col("n").cast(DoubleType)).as("mean"))
-      case None =>
-        val spark = embeddings.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("subspace", IntegerType), StructField("cell", IntegerType),
-            StructField("dim", IntegerType), StructField("s", LongType),
-            StructField("n", LongType), StructField("mean", DoubleType))))
+      case None => emptySubspaceLongForm(embeddings)
     }
 
   // ---- residual product quantization (FAISS IVFPQ proper) ------------
@@ -785,11 +782,7 @@ object Cluster {
           cells.flatMap(c => (1 to st.dsub).map(i =>
             (s, c.cell, i, c.s(i - 1), c.n, c.s(i - 1).toDouble / c.n.toDouble)))
         }.toDF("subspace", "cell", "dim", "s", "n", "mean")
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("subspace", IntegerType), StructField("cell", IntegerType),
-            StructField("dim", IntegerType), StructField("s", LongType),
-            StructField("n", LongType), StructField("mean", DoubleType))))
+      case None => emptySubspaceLongForm(embeddings)
     }
   }
 
@@ -823,11 +816,6 @@ object Cluster {
     require(sampleMod >= 1, s"sampleMod must be positive, got $sampleMod")
     requirePqParams(m, kSub, iters) // before the corpus is touched (fail-fast)
     require(coarseK >= 2, s"coarseK must be >= 2, got $coarseK")
-    val spark = embeddings.sparkSession
-    def emptyOut = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("subspace", IntegerType), StructField("cell", IntegerType),
-        StructField("dim", IntegerType), StructField("s", LongType),
-        StructField("n", LongType), StructField("mean", DoubleType))))
     val sample = embeddings.filter(col("vec_id") % sampleMod === 0)
     grid(sample) match {
       case Some((scale, d)) =>
@@ -860,12 +848,12 @@ object Cluster {
         val (subFrames, _) = pqAssignedFromQ(
           rqF.filter(col("vec_id") % sampleMod === 0), d, m, kSub, iters)
         val states = pqSubStates(subFrames, dsub)
-        if (states.exists(_.isEmpty)) return emptyOut
+        if (states.exists(_.isEmpty)) return emptySubspaceLongForm(embeddings)
         // 4. full-corpus PQ encode + occupancy in ONE exploded keyed agg
         val exploded = rqF.select(explode(array((0 until m).map { s =>
             val sl = slice(col("q"), s * dsub + 1, dsub)
             struct(lit(s).as("sub"),
-              KMeansCells.argmin(sl, exprStateOf(states(s))).as("cell"),
+              KMeansCells.argmin(sl, exprState(states(s))).as("cell"),
               sl.as("qs"))
           }: _*)).as("e"))
           .select(col("e.sub").as("subspace"), col("e.cell").as("cell"),
@@ -879,17 +867,9 @@ object Cluster {
             (col("pos") + 1).cast(IntegerType).as("dim"),
             col("s"), col("n"),
             (col("s").cast(DoubleType) / col("n").cast(DoubleType)).as("mean"))
-      case None => emptyOut
+      case None => emptySubspaceLongForm(embeddings)
     }
   }
-
-  /** Expression-state tuples from exact centroids — same fail-loud 2⁵³
-    * guard as [[exprState]]: a residual-codebook cell whose |s|² exceeds
-    * the bound would silently round in the int64→double cast and break
-    * oracle bit-parity without an error (r10 ADVICE), so every scorer
-    * path shares the guard. */
-  private[ext] def exprStateOf(cens: Seq[Centroid]): Seq[(Int, Double, Double, Seq[Long])] =
-    cens.map(c => (c.cell, c.n.toDouble, nsqOverN2(c), c.s.toIndexedSeq))
 
   /** Semantic (embedding-space) contamination audit, cluster-routed —
     * the trained-quantizer edition of [[Corpus.bloomContamination]]'s
@@ -943,14 +923,12 @@ object Cluster {
             explode(col("cells")).as("cell"))
         probed.join(broadcast(evalIdx), Seq("cell"))
           .withColumn("cosine",
-            dot(col("embedding"), col("emb_e")) / (sqrt(col("nsq")) * sqrt(col("nsq_e"))))
+            Sim.cosine(dot(col("embedding"), col("emb_e")), col("nsq"), col("nsq_e")))
           .filter(col("cosine") >= threshold)
           .select(col("vec_id"), col("eval_id"), col("cosine"))
       case None =>
-        val spark = probe.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vec_id", LongType), StructField("eval_id", LongType),
-            StructField("cosine", DoubleType))))
+        emptyFrame(probe.sparkSession, StructField("vec_id", LongType),
+          StructField("eval_id", LongType), StructField("cosine", DoubleType))
     }
   }
 
@@ -1035,14 +1013,12 @@ object Cluster {
         a.join(b, Seq("cell", "subkey"))
           .filter(col("keep_id") < col("dup_id"))
           .withColumn("cosine",
-            dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
+            Sim.cosine(dot(col("emb_a"), col("emb_b")), col("nsq_a"), col("nsq_b")))
           .filter(col("cosine") >= threshold)
           .select(col("keep_id"), col("dup_id"), col("cosine"))
       case None =>
-        val spark = embeddings.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("keep_id", LongType), StructField("dup_id", LongType),
-            StructField("cosine", DoubleType))))
+        emptyFrame(embeddings.sparkSession, StructField("keep_id", LongType),
+          StructField("dup_id", LongType), StructField("cosine", DoubleType))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,12 +31,9 @@ import org.apache.spark.sql.types._
   */
 object Graph {
 
-  private val RankSchema = StructType(Seq(
-    StructField("vertex", StringType), StructField("rank_units", LongType)))
-
   private def emptyRanks(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.emptyRDD[Row], RankSchema)
+    emptyFrame(df.sparkSession,
+      StructField("vertex", StringType), StructField("rank_units", LongType))
 
   /** The shared per-round state: vertex frame, edge frame with riding
     * out-degrees, the distinct non-dangling (has-out-edges) vertex set,

@@ -33,7 +33,9 @@ import graft.operators.States
   */
 object Sim {
 
+  import graft.operators.DriverPar
   import graft.operators.Partitioning.spread
+  import org.apache.spark.sql.graft.{KMeansCells, PqAdcDot}
   import org.apache.spark.sql.graft.DotProduct.dot
 
   /** Embedding width, from the first row (0 for an empty table — callers
@@ -42,6 +44,23 @@ object Sim {
     embeddings.select(size(col("embedding"))).take(1).headOption.map(_.getInt(0)).getOrElse(0)
 
   private def el(c: Column, i: Int): Column = element_at(c, i).cast(DoubleType)
+
+  /** `num / (|a|·|b|)` from the two squared norms: the one cosine every
+    * scorer here and in [[Cluster]] computes. The numerator is the exact
+    * dot, or an ADC estimate of it. */
+  private[ext] def cosine(num: Column, nsqA: Column, nsqB: Column): Column =
+    num / (sqrt(nsqA) * sqrt(nsqB))
+
+  /** The exact pair cosine over the `emb_a`/`nsq_a` and `emb_b`/`nsq_b`
+    * sides a candidate join carries. */
+  private def exactCosine: Column =
+    cosine(dot(col("emb_a"), col("emb_b")), col("nsq_a"), col("nsq_b"))
+
+  /** The payload each side of an exact-cosine candidate join carries. */
+  private def sideA: Seq[Column] = Seq(col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
+  private def sideB: Seq[Column] = Seq(col("embedding").as("emb_b"), col("nsq").as("nsq_b"))
+
+  private def sumSq(v: Seq[Double]): Double = v.foldLeft(0.0)((a, x) => a + x * x)
 
   private def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("neighbor_id"))
@@ -192,12 +211,11 @@ object Sim {
       .filter(col("nsq") > 0) // zero-norm vectors have no cosine (see bruteTopK)
     // the bucket equi-join then shuffles/broadcasts by AQE's choice — no
     // forced hint, this is the scale path
-    val left  = e.select(col("bucket"), col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
-    val right = e.select(col("bucket"), col("vec_id").as("neighbor_id"), col("embedding").as("emb_b"), col("nsq").as("nsq_b"))
+    val left  = e.select(col("bucket") +: col("vec_id") +: sideA: _*)
+    val right = e.select(col("bucket") +: col("vec_id").as("neighbor_id") +: sideB: _*)
     val pairs = left.join(right, Seq("bucket"), "inner")
       .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
+      .withColumn("cosine", exactCosine)
     topK(pairs, k)
   }
 
@@ -277,8 +295,8 @@ object Sim {
         keys.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
-        (dot(col("a.embedding"), col("b.embedding")) /
-          (sqrt(col("a.nsq")) * sqrt(col("b.nsq")))).as("cosine"))
+        cosine(dot(col("a.embedding"), col("b.embedding")), col("a.nsq"), col("b.nsq"))
+          .as("cosine"))
       // OR across tables: a pair meeting in several tables computes the
       // SAME cosine (identical deterministic expression over identical
       // inputs), so a distinct on the narrow triple dedups exactly
@@ -296,65 +314,103 @@ object Sim {
   def centroid(d: Int, c: Int): Array[Float] =
     Array.tabulate(d)(i => (centroidInt(c, i).toDouble / 1000.0 - 0.5).toFloat)
 
+  /** The IVF candidate step every IVF search runs: each `probeSide` row
+    * probes every cell of its `cells` list (nearest first), each
+    * `indexSide` row is indexed in `cells[1]` (its argmin cell) only, and
+    * a pair is (probe, indexed) in one shared cell, never a vector with
+    * itself. `probe` and `index` are the payload columns each side
+    * carries into the cell join; `scores` are computed on the joined row,
+    * which also holds `cell`, and follow `vec_id, neighbor_id` in the
+    * output.
+    *
+    * No pair dedup is needed: the indexed side carries exactly ONE cell
+    * per vector and a probe's cell list is distinct, so a pair meets in
+    * at most one cell — a distinct here would re-shuffle the whole
+    * candidate stream for nothing. At cluster scale the cell is the
+    * partition key: the index side shuffles once by cell (building the
+    * inverted lists), probes shuffle `nProbe`× — exactly the IVF fan-out
+    * — and AQE handles the cell-size skew that real embedding clusters
+    * produce. */
+  private def ivfPairs(probeSide: DataFrame, indexSide: DataFrame,
+      probe: Seq[Column], index: Seq[Column], scores: Column*): DataFrame = {
+    val probes = probeSide.select(
+      (col("vec_id") +: probe) :+ explode(col("cells")).as("cell"): _*)
+    val indexed = indexSide.select(
+      (col("vec_id").as("neighbor_id") +: index) :+ element_at(col("cells"), 1).as("cell"): _*)
+    probes.join(indexed, Seq("cell"), "inner")
+      .filter(col("vec_id") =!= col("neighbor_id"))
+      .select(col("vec_id") +: col("neighbor_id") +: scores: _*)
+  }
+
+  /** `(vec_id, embedding, nsq, cells)` of every non-zero vector, the
+    * frame both sides of an exact-cosine IVF search read. Checkpointed
+    * with localCheckpoint, not cache, so the blocks free on GC instead of
+    * living in the session CacheManager (see MinHash.nearDupPairs). */
+  private def routed(embeddings: DataFrame, cells: Column): DataFrame =
+    spread(embeddings, col("vec_id"))
+      .select(col("vec_id"), col("embedding"),
+        dot(col("embedding"), col("embedding")).as("nsq"), cells.as("cells"))
+      .filter(col("nsq") > 0)
+      .localCheckpoint(false)
+
+  /** Trained coarse routing, the preamble of the IVF searches that train
+    * their own quantizer: one grid scan (or the caller's `gridIn`), one
+    * checkpointed q-frame, and coarse Lloyd on it, overlapped with
+    * `alongside` — the caller's other work on the same q-frame and width
+    * (same states and rows as the sequential spelling).
+    * `nProbe` is clamped to the non-empty cell count (the oracle's
+    * `rk <= nProbe` semantics) instead of throwing on a collapsed
+    * clustering. Yields the grid scale, the width, the `cells` column
+    * (the nearest trained cells, nearest first) and `alongside`'s result;
+    * None on an empty or all-zero corpus. */
+  private def coarseRouting[T](embeddings: DataFrame, coarseK: Int, iters: Int,
+      nProbe: Int, gridIn: Option[(Double, Int)] = None)(
+      alongside: (DataFrame, Int) => T): Option[(Double, Int, Column, T)] = {
+    val gridOpt = gridIn.orElse(Cluster.grid(embeddings))
+    if (gridOpt.isEmpty) return None
+    val (scale, d) = gridOpt.get
+    val qf = embeddings.select(col("vec_id"), Cluster.qCol(scale).as("q"))
+      .localCheckpoint(false)
+    val (coarse, t) = DriverPar.par2(
+      Cluster.coarseStateFromQ(qf, d, coarseK, iters), alongside(qf, d))
+    if (coarse.isEmpty) return None
+    require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
+    val np = math.min(nProbe, coarse.size)
+    Some((scale, d, KMeansCells.probe(Cluster.qCol(scale), Cluster.exprState(coarse), np), t))
+  }
+
   /** IVF (inverted-file) approximate cosine top-k — the cell-probing
     * alternative to sign-LSH. A coarse quantizer of `nCells` deterministic
     * centroids partitions the vectors: each vector is INDEXED in its
     * nearest cell (by the score -2·dot(v,c) + |c|², the argmin-equivalent
     * of L2 distance with the constant |v|² dropped) and PROBES its
     * `nProbe` nearest cells, so a candidate pair is (probe, indexed) in
-    * the same cell — the standard recall lever without ever building n².
+    * the same cell — the standard recall lever without ever building n²
+    * ([[ivfPairs]]).
     *
-    * At cluster scale the cell is the partition key: the index side
-    * shuffles once by cell (building the inverted lists), probes shuffle
-    * `nProbe`× — exactly the IVF fan-out — and AQE handles the cell-size
-    * skew that real embedding clusters produce. Centroids here are
-    * arithmetic-derived (oracle-reproducible); [[ivfTopKTrained]] is the
-    * production variant that searches against TRAINED k-means centroids
-    * ([[Cluster.kmeansCentroids]]) with the same plan shape. Ties in the
-    * argmin go to the lowest cell id in both engines (strict `<`
-    * comparison chain). */
+    * Centroids here are arithmetic-derived (oracle-reproducible);
+    * [[ivfTopKTrained]] is the production variant that searches against
+    * TRAINED k-means centroids ([[Cluster.kmeansCentroids]]) with the
+    * same plan shape. Ties in the argmin go to the lowest cell id in both
+    * engines (strict `<` comparison chain). */
   def ivfTopK(embeddings: DataFrame, k: Int, nCells: Int, nProbe: Int): DataFrame = {
     require(nCells >= 2, s"nCells must be >= 2, got $nCells")
     require(nProbe >= 1 && nProbe <= nCells, s"nProbe must be in [1,$nCells], got $nProbe")
     val d = dim(embeddings)
-    import org.apache.spark.sql.graft.DotProduct.dot
-    val scored = spread(embeddings, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nsq"),
-        array((0 until nCells).map { c =>
-          val cen = centroid(d, c)
-          val nsqC = cen.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-          dot(col("embedding"), typedlit(cen)) * -2.0 + lit(nsqC)
-        }: _*).as("scores"))
-      .filter(col("nsq") > 0)
+    val scores = array((0 until nCells).map { c =>
+      val cen = centroid(d, c)
+      dot(col("embedding"), typedlit(cen)) * -2.0 + lit(sumSq(cen.toSeq.map(_.toDouble)))
+    }: _*)
     // rank cells by (score, cell) via array sort on (score, idx) structs —
     // the idx tiebreaker makes the order total in both engines
-    val ranked = scored.withColumn("cells",
-      slice(
-        transform(
-          array_sort(zip_with(col("scores"), sequence(lit(0), lit(nCells - 1)),
-            (s, i) => struct(s.as("s"), i.as("c")))),
-          e => e.getField("c")),
-        1, nProbe))
-    // probe + index sides reuse the ranked frame; localCheckpoint (not
-    // cache) so the blocks free on GC instead of living in the session
-    // CacheManager (see MinHash.nearDupPairs)
-    val e = ranked.select(col("vec_id"), col("embedding"), col("nsq"),
-      element_at(col("cells"), 1).as("own_cell"), col("cells")).localCheckpoint(false)
-    val probes = e.select(col("vec_id"), col("embedding").as("emb_a"),
-      col("nsq").as("nsq_a"), explode(col("cells")).as("cell"))
-    val indexed = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("emb_b"), col("nsq").as("nsq_b"), col("own_cell").as("cell"))
-    // no pair dedup needed: the indexed side carries exactly ONE cell per
-    // vector (its argmin) and a probe's cell list is distinct, so a
-    // (probe, indexed) pair can meet in at most one cell — a distinct
-    // here would re-shuffle the whole candidate stream for nothing
-    val pairs = probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
-      .select(col("vec_id"), col("neighbor_id"), col("cosine"))
-    topK(pairs, k)
+    val cells = slice(
+      transform(
+        array_sort(zip_with(scores, sequence(lit(0), lit(nCells - 1)),
+          (s, i) => struct(s.as("s"), i.as("c")))),
+        e => e.getField("c")),
+      1, nProbe)
+    val e = routed(embeddings, cells)
+    topK(ivfPairs(e, e, sideA, sideB, exactCosine.as("cosine")), k)
   }
 
   /** IVF search against TRAINED centroids — the production pairing of
@@ -373,11 +429,10 @@ object Sim {
     * int64 score `dot(q,s)·(-2)/n + |s|²/n²`
     * ([[org.apache.spark.sql.graft.KMeansProbe]] — a native k×d codegen
     * loop, so trained k in the 10³–10⁴ range planes through the same
-    * expression). Candidates meet in at most ONE cell (the indexed side
-    * carries only its argmin), so no pair dedup is needed; the cosine is
-    * scored on the ORIGINAL floats with the usual left-assoc chain.
-    * Plan shape is [[ivfTopK]]'s unchanged: one narrow scoring pass,
-    * explode ×nProbe, one cell equi-join, one top-k window.
+    * expression). The cosine is scored on the ORIGINAL floats with the
+    * usual left-assoc chain. Plan shape is [[ivfTopK]]'s unchanged: one
+    * narrow scoring pass, explode ×nProbe, one cell equi-join, one top-k
+    * window.
     *
     * GRID CONTRACT: the centroids live on a quantization grid fixed at
     * TRAINING time. When they were trained on `embeddings` itself the
@@ -388,43 +443,16 @@ object Sim {
     * routing silently skews against centroids on another grid. */
   def ivfTopKTrained(embeddings: DataFrame, centroids: DataFrame, k: Int,
       nProbe: Int, gridScale: Option[Double] = None): DataFrame = {
-    import graft.ext.Cluster
     val state = Cluster.centroidState(centroids)
     val gridOpt = gridScale.map(sc => (sc, 0)).orElse(Cluster.grid(embeddings))
-    if (state.isEmpty || gridOpt.isEmpty) {
-      val spark = embeddings.sparkSession
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id", LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-          org.apache.spark.sql.types.StructField("cosine", DoubleType),
-          org.apache.spark.sql.types.StructField("rank", IntegerType))))
-    }
+    if (state.isEmpty || gridOpt.isEmpty) return emptyNeighbors(embeddings)
     require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
     // clamp to the non-empty cell count (the oracle's `rk <= nProbe`
     // semantics) instead of throwing on a collapsed clustering
     val np = math.min(nProbe, state.size)
-    val (scale, _) = gridOpt.get
-    val scored = spread(embeddings, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nsq"),
-        org.apache.spark.sql.graft.KMeansCells.probe(
-          Cluster.qCol(scale), Cluster.exprState(state), np).as("cells"))
-      .filter(col("nsq") > 0)
-    // probe + index sides reuse the scored frame; localCheckpoint (not
-    // cache) for the same block-lifetime reason as ivfTopK
-    val e = scored.select(col("vec_id"), col("embedding"), col("nsq"),
-      element_at(col("cells"), 1).as("own_cell"), col("cells")).localCheckpoint(false)
-    val probes = e.select(col("vec_id"), col("embedding").as("emb_a"),
-      col("nsq").as("nsq_a"), explode(col("cells")).as("cell"))
-    val indexed = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("emb_b"), col("nsq").as("nsq_b"), col("own_cell").as("cell"))
-    val pairs = probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
-      .select(col("vec_id"), col("neighbor_id"), col("cosine"))
-    topK(pairs, k)
+    val e = routed(embeddings,
+      KMeansCells.probe(Cluster.qCol(gridOpt.get._1), Cluster.exprState(state), np))
+    topK(ivfPairs(e, e, sideA, sideB, exactCosine.as("cosine")), k)
   }
 
   /** ONE delta's PER-VECTOR IVF index rows under a FIXED shipped
@@ -437,20 +465,14 @@ object Sim {
     * under overlap. Zero-norm vectors are excluded by the usual cosine
     * contract. */
   def ivfIndexAdd(delta: DataFrame, centroids: DataFrame, gridScale: Double): DataFrame = {
-    import graft.ext.Cluster
     val state = Cluster.centroidState(centroids)
-    val spark = delta.sparkSession
     if (state.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id", LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(FloatType)),
-          org.apache.spark.sql.types.StructField("nsq", DoubleType),
-          org.apache.spark.sql.types.StructField("cell", IntegerType))))
+      return emptyFrame(delta.sparkSession, StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)), StructField("nsq", DoubleType),
+        StructField("cell", IntegerType))
     delta.select(col("vec_id"), col("embedding"),
         dot(col("embedding"), col("embedding")).as("nsq"),
-        element_at(org.apache.spark.sql.graft.KMeansCells.probe(
+        element_at(KMeansCells.probe(
           Cluster.qCol(gridScale), Cluster.exprState(state), 1), 1).as("cell"))
       .filter(col("nsq") > 0)
   }
@@ -485,25 +507,15 @@ object Sim {
     * candidate rows). */
   def knnDeltaVsState(state: DataFrame, delta: DataFrame, centroids: DataFrame,
       gridScale: Double, k: Int, nProbe: Int): DataFrame = {
-    import graft.ext.Cluster
     val cState = Cluster.centroidState(centroids)
-    val spark = delta.sparkSession
-    if (cState.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id", LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-          org.apache.spark.sql.types.StructField("cosine", DoubleType),
-          org.apache.spark.sql.types.StructField("rank", IntegerType))))
+    if (cState.isEmpty) return emptyNeighbors(delta)
     require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
     val np = math.min(nProbe, cState.size)
     val deltaIdx = ivfIndexAdd(delta, centroids, gridScale).localCheckpoint(false)
     val all = state.select(col("vec_id"), col("embedding"), col("nsq"), col("cell"))
       .unionByName(deltaIdx)
-    val probes = deltaIdx
-      .select(col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"),
-        explode(org.apache.spark.sql.graft.KMeansCells.probe(
-          Cluster.qCol(gridScale), Cluster.exprState(cState), np)).as("cell"))
+    val probes = deltaIdx.select((col("vec_id") +: sideA) :+ explode(KMeansCells.probe(
+      Cluster.qCol(gridScale), Cluster.exprState(cState), np)).as("cell"): _*)
     // the state∪delta side probed IN PLACE; the routed delta broadcasts
     // (aliases, not frame-column refs: `all` shares deltaIdx's lineage
     // with `probes`, so unaliased attributes would be ambiguous)
@@ -512,8 +524,8 @@ object Sim {
         col("s.cell") === col("p.cell") && col("s.vec_id") =!= col("p.vec_id"))
       .select(col("p.vec_id").as("vec_id"),
         col("s.vec_id").as("neighbor_id"),
-        (dot(col("p.emb_a"), col("s.embedding")) /
-          (sqrt(col("p.nsq_a")) * sqrt(col("s.nsq")))).as("cosine"))
+        cosine(dot(col("p.emb_a"), col("s.embedding")), col("p.nsq_a"), col("s.nsq"))
+          .as("cosine"))
     topK(pairs, k)
   }
 
@@ -541,15 +553,10 @@ object Sim {
     * contain the delta's vec_ids. */
   def semDedupDeltaPairs(state: DataFrame, delta: DataFrame, centroids: DataFrame,
       gridScale: Double, threshold: Double): DataFrame = {
-    import graft.ext.Cluster
     val cState = Cluster.centroidState(centroids)
-    val spark = delta.sparkSession
     if (cState.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("keep_id", LongType),
-          org.apache.spark.sql.types.StructField("dup_id", LongType),
-          org.apache.spark.sql.types.StructField("cosine", DoubleType))))
+      return emptyFrame(delta.sparkSession, StructField("keep_id", LongType),
+        StructField("dup_id", LongType), StructField("cosine", DoubleType))
     val deltaIdx = ivfIndexAdd(delta, centroids, gridScale).localCheckpoint(false)
     val all = state.select(col("vec_id"), col("embedding"), col("nsq"), col("cell"))
       .unionByName(deltaIdx)
@@ -559,8 +566,8 @@ object Sim {
       .select(
         least(col("s.vec_id"), col("p.vec_id")).as("keep_id"),
         greatest(col("s.vec_id"), col("p.vec_id")).as("dup_id"),
-        (dot(col("p.embedding"), col("s.embedding")) /
-          (sqrt(col("p.nsq")) * sqrt(col("s.nsq")))).as("cosine"))
+        cosine(dot(col("p.embedding"), col("s.embedding")), col("p.nsq"), col("s.nsq"))
+          .as("cosine"))
       .filter(col("cosine") >= threshold)
       .distinct()
   }
@@ -598,68 +605,38 @@ object Sim {
     probeMod.foreach { case (m, r) =>
       require(m >= 1L && r >= 0L && r < m,
         s"probe sample must be a residue class: 0 <= res < mod, got ($m, $r)") }
-    import graft.ext.Cluster
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       s"nProbes must be non-empty positive, got $nProbes")
     require(nProbes.distinct.size == nProbes.size,
       s"duplicate operating points would emit duplicate curve rows: $nProbes")
-    val spark = embeddings.sparkSession
-    def emptyOut = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("nprobe", IntegerType),
-        org.apache.spark.sql.types.StructField("candidate_pairs", LongType),
-        org.apache.spark.sql.types.StructField("truth_pairs", LongType),
-        org.apache.spark.sql.types.StructField("hit_pairs", LongType),
-        org.apache.spark.sql.types.StructField("recall", DoubleType))))
-    // one grid scan, one quantize+checkpoint (the ivfPqAdcPairs shared-
-    // q-frame discipline); state bit-identical to the long-form path
-    val gridOpt = Cluster.grid(embeddings)
-    if (gridOpt.isEmpty) return emptyOut
+    def emptyOut = emptyFrame(embeddings.sparkSession, StructField("nprobe", IntegerType),
+      StructField("candidate_pairs", LongType), StructField("truth_pairs", LongType),
+      StructField("hit_pairs", LongType), StructField("recall", DoubleType))
     val sampled: DataFrame => DataFrame = df =>
       probeMod.fold(df) { case (m, r) => df.filter(col("vec_id") % m === r) }
-    // coarse training and the brute truth are independent until the
-    // curve's final join — overlap their driver-blocking chains (guide
-    // §2.6; same states/rows as the sequential spelling).
+    // the brute truth runs alongside coarse training: the two are
+    // independent until the curve's final join.
     //
     // probe side pre-filtered BELOW bruteTopK's typed boundary: the brute
     // kernel scans only the sampled residue class (1/mod of the probes),
     // not all probes with 1-1/mod of the output discarded — identical
     // rows either way (see the two-frame bruteTopK contract), but only
     // this form realizes the 1/mod cost the sampled audit exists for
-    val (state, truthAndCnt) = graft.operators.DriverPar.par2(
-      Cluster.coarseStateFromQ(
-        embeddings.select(col("vec_id"), Cluster.qCol(gridOpt.get._1).as("q"))
-          .localCheckpoint(false), gridOpt.get._2, coarseK, iters), {
-        val t = bruteTopK(sampled(embeddings), embeddings, k)
-          .select(col("vec_id"), col("neighbor_id"))
-          .localCheckpoint(false)
-        (t, t.count())
-      })
-    if (state.isEmpty) return emptyOut
-    val (truth, truthCnt) = truthAndCnt
-    if (truthCnt == 0L) return emptyOut // empty-corpus short-circuit, as ann_recall
-    val (scale, _) = gridOpt.get
-    val maxNp = math.min(nProbes.max, state.size) // clamp, as in ivfTopKTrained
-    val scored = spread(embeddings, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nsq"),
-        org.apache.spark.sql.graft.KMeansCells.probe(
-          Cluster.qCol(scale), Cluster.exprState(state), maxNp).as("cells"))
-      .filter(col("nsq") > 0)
-      .localCheckpoint(false)
-    val probes = sampled(scored)
-      .select(col("vec_id"), col("embedding").as("emb_a"),
-        col("nsq").as("nsq_a"), posexplode(col("cells")).as(Seq("pos", "cell")))
-      .select(col("vec_id"), col("emb_a"), col("nsq_a"),
-        (col("pos") + 1).as("pr"), col("cell"))
-    val indexed = scored.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("emb_b"), col("nsq").as("nsq_b"),
-      element_at(col("cells"), 1).as("cell"))
-    val pairs = probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
-      .select(col("vec_id"), col("neighbor_id"), col("pr"), col("cosine"))
+    val routing = coarseRouting(embeddings, coarseK, iters, nProbes.max) { (_, _) =>
+      val t = bruteTopK(sampled(embeddings), embeddings, k)
+        .select(col("vec_id"), col("neighbor_id"))
+        .localCheckpoint(false)
+      (t, t.count())
+    }
+    val (cells, truth, truthCnt) = routing match {
+      case Some((_, _, cells, (truth, cnt))) if cnt > 0L => (cells, truth, cnt)
+      case _ => return emptyOut // the empty-corpus short-circuit, as ann_recall
+    }
+    val scored = routed(embeddings, cells)
+    // a pair's probe rank is its cell's position in the probe's list
+    val pairs = ivfPairs(sampled(scored), scored,
+        sideA :+ col("cells").as("probe_cells"), sideB,
+        array_position(col("probe_cells"), col("cell")).as("pr"), exactCosine.as("cosine"))
       .join(truth.withColumn("is_truth", lit(1)), Seq("vec_id", "neighbor_id"), "left")
       .localCheckpoint(false)
     // ONE windowed pass per curve point: hit counting and candidate
@@ -681,6 +658,12 @@ object Sim {
           (col("hit_pairs").cast(DoubleType) / lit(truthCnt.toDouble)).as("recall"))
     }.reduce(_.unionByName(_))
   }
+
+  /** The empty answer of a top-k search. */
+  private def emptyNeighbors(embeddings: DataFrame): DataFrame =
+    emptyFrame(embeddings.sparkSession, StructField("vec_id", LongType),
+      StructField("neighbor_id", LongType), StructField("cosine", DoubleType),
+      StructField("rank", IntegerType))
 
   /** IVF-PQ search — the full FAISS architecture end-to-end: the
     * trained coarse quantizer ROUTES (index in argmin cell, probe the
@@ -705,16 +688,6 @@ object Sim {
     * so even the APPROXIMATE ranking is hash-checked. Cosine is
     * approximate by construction (quantization error); k and the
     * codebook size trade recall vs compression. */
-  private def emptyNeighbors(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id", LongType),
-        org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-        org.apache.spark.sql.types.StructField("cosine", DoubleType),
-        org.apache.spark.sql.types.StructField("rank", IntegerType))))
-  }
-
   def ivfPqTopK(embeddings: DataFrame, m: Int = 4, kSub: Int = 8,
       coarseK: Int = 8, nProbe: Int = 2, k: Int = 5): DataFrame =
     ivfPqTopKWithGrid(embeddings, m, kSub, coarseK, nProbe, k, None)
@@ -726,6 +699,37 @@ object Sim {
       .map(pairs => topK(pairs, k))
       .getOrElse(emptyNeighbors(embeddings))
 
+  /** Per-subspace codebook means `means(s)(code)` — the ADC lookup table,
+    * indexed by raw code id; ids no cell holds are zero-filled (the
+    * encoder never emits them). */
+  private def codeMeans(subs: Seq[Seq[Cluster.Centroid]]): Seq[Seq[Seq[Double]]] =
+    subs.map { cells =>
+      val byCell = cells.map(c => c.cell -> c).toMap
+      (0 to cells.map(_.cell).max).map(c => byCell.get(c) match {
+        case Some(cen) => cen.s.toSeq.map(_.toDouble / cen.n.toDouble)
+        case None => IndexedSeq.fill(cells.head.s.length)(0.0)
+      })
+    }
+
+  /** The reconstruction norm `Σ_s |means(s)(codes[s])|²` over a `codes`
+    * column: a driver-built |mean|² table per subspace, looked up and
+    * summed in subspace order as the oracle's chain spells it. */
+  private def reconNsq(means: Seq[Seq[Seq[Double]]], codes: Column): Column =
+    means.zipWithIndex.map { case (ms, s) =>
+      element_at(typedlit(ms.map(sumSq)), element_at(codes, s + 1) + 1)
+    }.reduceLeft(_ + _)
+
+  /** The asymmetric-distance candidates of an ADC search: `base` holds
+    * `(vec_id, embedding, nsq, cells, codes, rnsq)`; non-zero vectors
+    * probe with their floats, non-zero reconstructions are indexed by
+    * their codes and norm only — m ints + one double per vector, never
+    * floats — and `num`, the ADC dot over `emb_a` and `codes_b`, is the
+    * cosine's numerator. */
+  private def adcPairs(base: DataFrame, num: Column): DataFrame =
+    ivfPairs(base.filter(col("nsq") > 0), base.filter(col("rnsq") > 0),
+      sideA, Seq(col("codes").as("codes_b"), col("rnsq")),
+      cosine(num, col("nsq_a"), col("rnsq")).as("cosine"))
+
   /** The ADC-scored candidate stream `(vec_id, neighbor_id, cosine)` of
     * [[ivfPqTopK]] — trained coarse routing, compressed candidates, the
     * asymmetric-distance cosine — WITHOUT the final top-k, so the refine
@@ -734,82 +738,38 @@ object Sim {
   private def ivfPqAdcPairs(embeddings: DataFrame, m: Int, kSub: Int,
       coarseK: Int, nProbe: Int,
       gridIn: Option[(Double, Int)] = None): Option[DataFrame] = {
-    import graft.ext.Cluster
-    import org.apache.spark.sql.graft.{KMeansCells, PqAdcDot}
     // gridIn lets the OPQ caller skip a redundant corpus scan: the grid
     // (max |component|, width) is PERMUTATION-INVARIANT, so the value
     // derived once on the unpermuted frame is bit-identical to what a
-    // re-derivation over the permuted projection would collect
-    val gridOpt = gridIn.orElse(Cluster.grid(embeddings))
-    if (gridOpt.isEmpty) return None
-    val (scale, d) = gridOpt.get
-    require(d % m == 0, s"embedding width $d is not divisible into $m subspaces")
-    // ONE grid scan and ONE quantize+checkpoint shared by BOTH trainers
-    // (coarse Lloyd + per-subspace PQ Lloyd): the previous shape paid
-    // the grid scan three times and quantized/checkpointed the corpus
-    // once per trainer — identical training state either way (same
-    // scale, same q integers, same seeded recursions)
-    val qf = embeddings.select(col("vec_id"), Cluster.qCol(scale).as("q"))
-      .localCheckpoint(false)
-    // the two trainers are INDEPENDENT given the shared checkpointed
-    // q-frame, and each is a chain of small driver-blocking collects —
-    // overlap them (guide §2.6) so one chain's tasks and planning fill
-    // the other's driver round-trips. States are bit-identical to the
-    // sequential spelling (same recursions, same collects). coarse is
-    // empty only for an empty q-frame (grid() already returned None on
-    // empty/all-zero), where the PQ trainer degrades to empty states
-    // the same way — the guard below is unchanged.
-    val (coarse, subCens) = graft.operators.DriverPar.par2(
-      Cluster.coarseStateFromQ(qf, d, coarseK, 2),
-      Cluster.pqSubStatesFromQ(qf, d, m, kSub, 2))
-    if (coarse.isEmpty || subCens.isEmpty || subCens.exists(_.isEmpty)) return None
-    require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
-    val np = math.min(nProbe, coarse.size) // clamp, as in ivfTopKTrained
-    val dsub = d / m
-    // per-subspace encoder state (cell, n, |s|²/n², sums) + mean/|mean|²
-    // tables, all from the bounded collected training state.
-    // via Cluster.exprStateOf so the |s|² < 2⁵³ fail-loud guard covers
-    // this scorer path too (r10 ADVICE: every table build shares it)
-    val subStates: Seq[Seq[(Int, Double, Double, Seq[Long])]] =
-      subCens.map(Cluster.exprStateOf)
-    val maxCell = subStates.map(_.map(_._1).max).max
-    // means indexed by raw cell id; cells the encoder cannot emit are
-    // zero-filled (never looked up)
-    val means: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      val byCell = subStates(s).map(st => st._1 -> st).toMap
-      (0 to maxCell).map(c => byCell.get(c) match {
-        case Some((_, n, _, sums)) => sums.map(x => x.toDouble / n)
-        case None => IndexedSeq.fill(dsub)(0.0)
-      })
-    }
-    val msq: Seq[Seq[Double]] =
-      means.map(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))
-    val qc = Cluster.qCol(scale)
-    val reconNsq = (0 until m).map(s =>
-        element_at(typedlit(msq(s)), element_at(col("codes"), s + 1) + 1))
-      .reduceLeft(_ + _)
-    val base = spread(embeddings, col("vec_id")).select(
-        col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nsq"),
-        KMeansCells.probe(qc, Cluster.exprState(coarse), np).as("cells"),
-        array((0 until m).map(s =>
-          KMeansCells.argmin(slice(qc, s * dsub + 1, dsub), subStates(s))): _*)
-          .as("codes"))
-      .withColumn("rnsq", reconNsq)
-      .localCheckpoint(false)
-    val probes = base.filter(col("nsq") > 0)
-      .select(col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"),
-        explode(col("cells")).as("cell"))
-    // the indexed side ships m ints + one norm per vector — never floats
-    val indexed = base.filter(col("rnsq") > 0)
-      .select(col("vec_id").as("neighbor_id"), col("codes").as("codes_b"),
-        element_at(col("cells"), 1).as("cell"), col("rnsq"))
-    Some(probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        PqAdcDot.adcDot(col("emb_a"), col("codes_b"), means) /
-          (sqrt(col("nsq_a")) * sqrt(col("rnsq"))))
-      .select(col("vec_id"), col("neighbor_id"), col("cosine")))
+    // re-derivation over the permuted projection would collect.
+    //
+    // the PQ trainer shares the coarse trainer's grid scan and q-frame
+    // and runs alongside it: each is a chain of small driver-blocking
+    // collects, so one chain's tasks and planning fill the other's
+    // driver round-trips. coarse is empty only for an empty q-frame,
+    // where the PQ trainer degrades to empty states the same way.
+    coarseRouting(embeddings, coarseK, 2, nProbe, gridIn) { (qf, d) =>
+      require(d % m == 0, s"embedding width $d is not divisible into $m subspaces")
+      Cluster.pqSubStatesFromQ(qf, d, m, kSub, 2)
+    }.filter { case (_, _, _, subCens) => subCens.nonEmpty && subCens.forall(_.nonEmpty) }
+      .map { case (scale, d, cells, subCens) =>
+        val dsub = d / m
+        // via Cluster.exprState so the |s|² < 2⁵³ fail-loud guard covers
+        // this scorer path too (every table build shares it)
+        val subStates = subCens.map(Cluster.exprState)
+        val means = codeMeans(subCens)
+        val qc = Cluster.qCol(scale)
+        val base = spread(embeddings, col("vec_id")).select(
+            col("vec_id"), col("embedding"),
+            dot(col("embedding"), col("embedding")).as("nsq"),
+            cells.as("cells"),
+            array((0 until m).map(s =>
+              KMeansCells.argmin(slice(qc, s * dsub + 1, dsub), subStates(s))): _*)
+              .as("codes"))
+          .withColumn("rnsq", reconNsq(means, col("codes")))
+          .localCheckpoint(false)
+        adcPairs(base, PqAdcDot.adcDot(col("emb_a"), col("codes_b"), means))
+      }
   }
 
   /** IVF-PQ search WITH a re-ranking refine stage — FAISS's IndexRefine,
@@ -839,7 +799,7 @@ object Sim {
     ivfPqAdcPairs(embeddings, m, kSub, coarseK, nProbe) match {
       case None => emptyNeighbors(embeddings)
       case Some(adc) =>
-        // refineR-per-probe pruning (heap vs window: the topK A/B switch)
+        // a row_number window per probe keeps its refineR best ADC rows
         val cand = topKPrune(adc.select(col("vec_id"), col("neighbor_id"), col("cosine")),
           Seq(col("cosine").desc, col("neighbor_id")), refineR)
         exactRescoreTopK(embeddings, cand, k)
@@ -858,12 +818,9 @@ object Sim {
         dot(col("embedding"), col("embedding")).as("nsq"))
       .filter(col("nsq") > 0)
     val exact = cand
-      .join(e.select(col("vec_id"), col("embedding").as("emb_a"),
-        col("nsq").as("nsq_a")), Seq("vec_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("emb_b"), col("nsq").as("nsq_b")), Seq("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
+      .join(e.select(col("vec_id") +: sideA: _*), Seq("vec_id"))
+      .join(e.select(col("vec_id").as("neighbor_id") +: sideB: _*), Seq("neighbor_id"))
+      .withColumn("cosine", exactCosine)
       .select(col("vec_id"), col("neighbor_id"), col("cosine"))
     topK(exact, k)
   }
@@ -991,64 +948,37 @@ object Sim {
     * d ints + one norm per vector through the cell join, never floats;
     * candidates are bounded by the probed cells. */
   def ivfSqTopK(embeddings: DataFrame, coarseK: Int = 8, nProbe: Int = 2,
-      k: Int = 5): DataFrame = {
-    import graft.ext.Cluster
-    import org.apache.spark.sql.graft.{KMeansCells, PqAdcDot}
-    val gridOpt = Cluster.grid(embeddings)
-    if (gridOpt.isEmpty) return emptyNeighbors(embeddings)
-    val (scale, d) = gridOpt.get
-    // one grid scan, one quantize+checkpoint (the ivfPqAdcPairs shared-
-    // q-frame discipline); state bit-identical to the long-form path
-    val coarse = Cluster.coarseStateFromQ(
-      embeddings.select(col("vec_id"), Cluster.qCol(scale).as("q"))
-        .localCheckpoint(false), d, coarseK, 2)
-    if (coarse.isEmpty) return emptyNeighbors(embeddings)
-    require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
-    val np = math.min(nProbe, coarse.size)
-    // per-dim [min, max] over the corpus: one aggregate, 2·d doubles
-    val mmRow = embeddings.select(
-      (1 to d).flatMap(i =>
-        Seq(min(el(col("embedding"), i)), max(el(col("embedding"), i)))): _*)
-      .collect().head
-    val mn = (0 until d).map(i => mmRow.getDouble(2 * i))
-    val mx = (0 until d).map(i => mmRow.getDouble(2 * i + 1))
-    val st = (0 until d).map(i => (mx(i) - mn(i)) / 255.0)
-    // the SQ "codebook" as a PqAdcDot mean table: d subspaces of width
-    // 1 with 256 affine reconstruction points each
-    val means: Seq[Seq[Seq[Double]]] = (0 until d).map { i =>
-      (0 until 256).map(c => Seq(mn(i) + (c + 0.5) * st(i)))
+      k: Int = 5): DataFrame =
+    coarseRouting(embeddings, coarseK, 2, nProbe)((_, _) => ()) match {
+      case None => emptyNeighbors(embeddings)
+      case Some((_, d, cells, _)) =>
+        // per-dim [min, max] over the corpus: one aggregate, 2·d doubles
+        val mmRow = embeddings.select(
+          (1 to d).flatMap(i =>
+            Seq(min(el(col("embedding"), i)), max(el(col("embedding"), i)))): _*)
+          .collect().head
+        val mn = (0 until d).map(i => mmRow.getDouble(2 * i))
+        val mx = (0 until d).map(i => mmRow.getDouble(2 * i + 1))
+        val st = (0 until d).map(i => (mx(i) - mn(i)) / 255.0)
+        // the SQ "codebook" as a PqAdcDot mean table: d subspaces of width
+        // 1 with 256 affine reconstruction points each
+        val means: Seq[Seq[Seq[Double]]] = (0 until d).map { i =>
+          (0 until 256).map(c => Seq(mn(i) + (c + 0.5) * st(i)))
+        }
+        val sqCodes = array((0 until d).map { i =>
+          if (mx(i) == mn(i)) lit(0)
+          else least(lit(255L), greatest(lit(0L),
+            floor((el(col("embedding"), i + 1) - lit(mn(i))) /
+              lit(mx(i) - mn(i)) * lit(255.0)))).cast(IntegerType)
+        }: _*)
+        val base = spread(embeddings, col("vec_id")).select(
+            col("vec_id"), col("embedding"),
+            dot(col("embedding"), col("embedding")).as("nsq"),
+            cells.as("cells"), sqCodes.as("codes"))
+          .withColumn("rnsq", reconNsq(means, col("codes")))
+          .localCheckpoint(false)
+        topK(adcPairs(base, PqAdcDot.adcDot(col("emb_a"), col("codes_b"), means)), k)
     }
-    val msq: Seq[Seq[Double]] = means.map(_.map(v => v.head * v.head))
-    val qc = Cluster.qCol(scale)
-    val sqCodes = array((0 until d).map { i =>
-      if (mx(i) == mn(i)) lit(0)
-      else least(lit(255L), greatest(lit(0L),
-        floor((el(col("embedding"), i + 1) - lit(mn(i))) /
-          lit(mx(i) - mn(i)) * lit(255.0)))).cast(IntegerType)
-    }: _*)
-    val reconNsq = (0 until d).map(i =>
-        element_at(typedlit(msq(i)), element_at(col("codes"), i + 1) + 1))
-      .reduceLeft(_ + _)
-    val base = spread(embeddings, col("vec_id")).select(
-        col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nsq"),
-        KMeansCells.probe(qc, Cluster.exprState(coarse), np).as("cells"),
-        sqCodes.as("codes"))
-      .withColumn("rnsq", reconNsq)
-      .localCheckpoint(false)
-    val probes = base.filter(col("nsq") > 0)
-      .select(col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"),
-        explode(col("cells")).as("cell"))
-    val indexed = base.filter(col("rnsq") > 0)
-      .select(col("vec_id").as("neighbor_id"), col("codes").as("codes_b"),
-        element_at(col("cells"), 1).as("cell"), col("rnsq"))
-    topK(probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        PqAdcDot.adcDot(col("emb_a"), col("codes_b"), means) /
-          (sqrt(col("nsq_a")) * sqrt(col("rnsq"))))
-      .select(col("vec_id"), col("neighbor_id"), col("cosine")), k)
-  }
 
   /** IVF-BQ search — binary (1-bit sign) quantization with a symmetric
     * Hamming pre-filter and an exact refine, the extreme-compression
@@ -1081,55 +1011,37 @@ object Sim {
     * any ingest that preserves signs. */
   def ivfBqTopK(embeddings: DataFrame, coarseK: Int = 8, nProbe: Int = 2,
       k: Int = 5, refineR: Int = 25): DataFrame = {
-    import graft.ext.Cluster
-    import org.apache.spark.sql.graft.KMeansCells
     require(refineR >= k, s"refineR must be >= k ($k), got $refineR")
-    val gridOpt = Cluster.grid(embeddings)
-    if (gridOpt.isEmpty) return emptyNeighbors(embeddings)
-    val (scale, d) = gridOpt.get
-    // one grid scan, one quantize+checkpoint (the ivfPqAdcPairs shared-
-    // q-frame discipline); state bit-identical to the long-form path
-    val coarse = Cluster.coarseStateFromQ(
-      embeddings.select(col("vec_id"), Cluster.qCol(scale).as("q"))
-        .localCheckpoint(false), d, coarseK, 2)
-    if (coarse.isEmpty) return emptyNeighbors(embeddings)
-    require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
-    val np = math.min(nProbe, coarse.size)
-    val nw = (d + 31) / 32
-    // sign-bit packing: 32 dims per word (32, not 64 — DuckDB's BIGINT
-    // `<<` refuses bit 63, and 32-bit words keep every literal and OR
-    // fold trivially exact in both engines)
-    val words = (0 until nw).map { j =>
-      val lo = 32 * j + 1
-      val hi = math.min(d, 32 * j + 32)
-      (lo to hi).map(i =>
-          when(el(col("embedding"), i) > 0, lit(1L << (i - lo))).otherwise(lit(0L)))
-        .reduceLeft((a, b) => a.bitwiseOR(b)).as(s"w$j")
+    coarseRouting(embeddings, coarseK, 2, nProbe)((_, _) => ()) match {
+      case None => emptyNeighbors(embeddings)
+      case Some((_, d, cells, _)) =>
+        val nw = (d + 31) / 32
+        // sign-bit packing: 32 dims per word (32, not 64 — DuckDB's BIGINT
+        // `<<` refuses bit 63, and 32-bit words keep every literal and OR
+        // fold trivially exact in both engines)
+        val words = (0 until nw).map { j =>
+          val lo = 32 * j + 1
+          val hi = math.min(d, 32 * j + 32)
+          (lo to hi).map(i =>
+              when(el(col("embedding"), i) > 0, lit(1L << (i - lo))).otherwise(lit(0L)))
+            .reduceLeft((a, b) => a.bitwiseOR(b)).as(s"w$j")
+        }
+        val base = spread(embeddings, col("vec_id")).select(
+            Seq(col("vec_id"),
+              dot(col("embedding"), col("embedding")).as("nsq"),
+              cells.as("cells")) ++ words: _*)
+          .filter(col("nsq") > 0) // zero vectors neither query nor index (no cosine)
+          .localCheckpoint(false) // feeds both sides of the Hamming join
+        val ham = (0 until nw)
+          .map(j => bit_count(col(s"a$j").bitwiseXOR(col(s"b$j"))))
+          .reduceLeft(_ + _)
+        // a row_number window per probe keeps its refineR nearest codes
+        val cand = topKPrune(
+          ivfPairs(base, base, (0 until nw).map(j => col(s"w$j").as(s"a$j")),
+            (0 until nw).map(j => col(s"w$j").as(s"b$j")), ham.as("ham")),
+          Seq(col("ham"), col("neighbor_id")), refineR)
+        exactRescoreTopK(embeddings, cand, k)
     }
-    val qc = Cluster.qCol(scale)
-    val base = spread(embeddings, col("vec_id")).select(
-        Seq(col("vec_id"),
-          dot(col("embedding"), col("embedding")).as("nsq"),
-          KMeansCells.probe(qc, Cluster.exprState(coarse), np).as("cells")) ++ words: _*)
-      .filter(col("nsq") > 0) // zero vectors neither query nor index (no cosine)
-      .localCheckpoint(false) // feeds both sides of the Hamming join
-    val probes = base.select(
-      Seq(col("vec_id"), explode(col("cells")).as("cell")) ++
-        (0 until nw).map(j => col(s"w$j").as(s"a$j")): _*)
-    val indexed = base.select(
-      Seq(col("vec_id").as("neighbor_id"), element_at(col("cells"), 1).as("cell")) ++
-        (0 until nw).map(j => col(s"w$j").as(s"b$j")): _*)
-    val ham = (0 until nw)
-      .map(j => bit_count(col(s"a$j").bitwiseXOR(col(s"b$j"))))
-      .reduceLeft(_ + _)
-    // refineR-per-probe pruning (heap vs window: the topK A/B switch)
-    val cand = topKPrune(
-      probes.join(indexed, Seq("cell"))
-        .filter(col("vec_id") =!= col("neighbor_id"))
-        .withColumn("ham", ham)
-        .select(col("vec_id"), col("neighbor_id"), col("ham")),
-      Seq(col("ham"), col("neighbor_id")), refineR)
-    exactRescoreTopK(embeddings, cand, k)
   }
 
   /** IVF-PQ search with RESIDUAL encoding — FAISS IVFPQ proper: the
@@ -1158,18 +1070,9 @@ object Sim {
     * so the approximate ranking is hash-checked end-to-end. */
   def ivfPqResidualTopK(embeddings: DataFrame, m: Int = 8, kSub: Int = 64,
       coarseK: Int = 8, nProbe: Int = 2, k: Int = 5, iters: Int = 2): DataFrame = {
-    import graft.ext.Cluster
-    import org.apache.spark.sql.graft.{KMeansCells, PqAdcDot}
     val stOpt = Cluster.residualPqState(embeddings, m, kSub, iters, coarseK)
-    if (stOpt.isEmpty || stOpt.get.coarse.isEmpty || stOpt.get.subs.exists(_.isEmpty)) {
-      val spark = embeddings.sparkSession
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id", LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-          org.apache.spark.sql.types.StructField("cosine", DoubleType),
-          org.apache.spark.sql.types.StructField("rank", IntegerType))))
-    }
+    if (stOpt.isEmpty || stOpt.get.coarse.isEmpty || stOpt.get.subs.exists(_.isEmpty))
+      return emptyNeighbors(embeddings)
     val st = stOpt.get
     require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
     val np = math.min(nProbe, st.coarse.size) // clamp, as in ivfTopKTrained
@@ -1180,43 +1083,30 @@ object Sim {
     val maxCell = st.coarse.map(_.cell).max
     val cmMeans: IndexedSeq[IndexedSeq[Double]] =
       (0 to maxCell).map(c => st.cmFlat.slice(c * d, (c + 1) * d))
-    val cmsq: IndexedSeq[Double] =
-      cmMeans.map(_.foldLeft(0.0)((a, x) => a + x * x))
     // guarded table build (|s|² < 2⁵³ fail-loud, as every scorer path)
-    val subExpr: Seq[Seq[(Int, Double, Double, Seq[Long])]] =
-      st.subs.map(Cluster.exprStateOf)
-    // per-subspace mean / |mean|² / cross tables indexed by raw code id
-    val maxSub: Seq[Int] = st.subs.map(_.map(_.cell).max)
-    val subMeans: Seq[Seq[Seq[Double]]] = st.subs.zipWithIndex.map { case (cells, s) =>
-      val byCell = cells.map(c => c.cell -> c).toMap
-      (0 to maxSub(s)).map(c => byCell.get(c) match {
-        case Some(cen) => cen.s.toIndexedSeq.map(x => x.toDouble / cen.n.toDouble)
-        case None => IndexedSeq.fill(dsub)(0.0)
-      })
-    }
-    val msqSub: Seq[IndexedSeq[Double]] = subMeans.map(_.map(
-      _.foldLeft(0.0)((a, x) => a + x * x)).toIndexedSeq)
+    val subExpr = st.subs.map(Cluster.exprState)
+    // per-subspace mean tables indexed by raw code id
+    val subMeans = codeMeans(st.subs)
     // FAISS's precomputed table: dot(cm slice s of cell, subspace-s mean
     // of code), flattened (cell · stride + code) — same left-to-right
     // accumulation the oracle's chain spells
     val crossFlat: Seq[IndexedSeq[Double]] = (0 until m).map { s =>
       (0 to maxCell).flatMap { cell =>
-        (0 to maxSub(s)).map { code =>
+        subMeans(s).map { mean =>
           var acc = 0.0
           var i = 0
           while (i < dsub) {
-            acc += cmMeans(cell)(s * dsub + i) * subMeans(s)(code)(i); i += 1
+            acc += cmMeans(cell)(s * dsub + i) * mean(i); i += 1
           }
           acc
         }
       }
     }
     val qc = Cluster.qCol(st.scale)
-    val coarseExpr = Cluster.exprState(st.coarse)
     val base0 = spread(embeddings, col("vec_id")).select(
         col("vec_id"), col("embedding"),
         dot(col("embedding"), col("embedding")).as("nsq"),
-        KMeansCells.probe(qc, coarseExpr, np).as("cells"),
+        KMeansCells.probe(qc, Cluster.exprState(st.coarse), np).as("cells"),
         qc.as("q"))
       .withColumn("cell0", element_at(col("cells"), 1))
     // residual vs the OWN cell on the trainer's exact layout, then codes
@@ -1229,34 +1119,22 @@ object Sim {
       KMeansCells.argmin(slice(col("rq"), s * dsub + 1, dsub), subExpr(s))): _*)
     val crossSum = (0 until m).map(s =>
       element_at(typedlit(crossFlat(s)),
-        col("cell0") * (maxSub(s) + 1) + element_at(col("codes"), s + 1) + 1))
+        col("cell0") * subMeans(s).size + element_at(col("codes"), s + 1) + 1))
       .reduceLeft(_ + _)
-    val subsqSum = (0 until m).map(s =>
-      element_at(typedlit(msqSub(s)), element_at(col("codes"), s + 1) + 1))
-      .reduceLeft(_ + _)
-    val rnsqCol = element_at(typedlit(cmsq), col("cell0") + 1) +
-      lit(2.0 * st.rscale) * crossSum + lit(st.rscale * st.rscale) * subsqSum
+    val rnsqCol = element_at(typedlit(cmMeans.map(sumSq)), col("cell0") + 1) +
+      lit(2.0 * st.rscale) * crossSum +
+      lit(st.rscale * st.rscale) * reconNsq(subMeans, col("codes"))
     val base = base0.withColumn("rq", rqCol)
       .withColumn("codes", codesCol)
       .withColumn("rnsq", rnsqCol)
       .select(col("vec_id"), col("embedding"), col("nsq"), col("cells"),
-        col("cell0"), col("codes"), col("rnsq"))
+        col("codes"), col("rnsq"))
       .localCheckpoint(false)
-    val probes = base.filter(col("nsq") > 0)
-      .select(col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"),
-        explode(col("cells")).as("cell"))
-    // indexed side: m ints + one norm, the same traffic as ivfPqTopK
-    val indexed = base.filter(col("rnsq") > 0)
-      .select(col("vec_id").as("neighbor_id"), col("codes").as("codes_b"),
-        col("cell0").as("cell"), col("rnsq"))
-    val pairs = probes.join(indexed, Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        (PqAdcDot.adcDot(col("emb_a"), array(col("cell")), Seq(cmMeans)) +
-          lit(st.rscale) * PqAdcDot.adcDot(col("emb_a"), col("codes_b"), subMeans)) /
-          (sqrt(col("nsq_a")) * sqrt(col("rnsq"))))
-      .select(col("vec_id"), col("neighbor_id"), col("cosine"))
-    topK(pairs, k)
+    // recon(y) = cm(cell) + rscale·pq(codes): the coarse term is one
+    // full-width "subspace" looked up by the joined row's cell
+    topK(adcPairs(base,
+      PqAdcDot.adcDot(col("emb_a"), array(col("cell")), Seq(cmMeans)) +
+        lit(st.rscale) * PqAdcDot.adcDot(col("emb_a"), col("codes_b"), subMeans)), k)
   }
 
   /** Brute all-pairs near-dup TRUTH: every unordered pair whose EXACT
@@ -1315,12 +1193,11 @@ object Sim {
       dot(col("embedding"), col("embedding")).as("nsq"),
       lshBucket(col("embedding"), d, nBits).as("bucket"))
       .filter(col("nsq") > 0) // zero-norm vectors have no cosine (see bruteTopK)
-    val left  = e.select(col("bucket"), col("vec_id"), col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
-    val right = e.select(col("bucket"), col("vec_id").as("neighbor_id"), col("embedding").as("emb_b"), col("nsq").as("nsq_b"))
+    val left  = e.select(col("bucket") +: col("vec_id") +: sideA: _*)
+    val right = e.select(col("bucket") +: col("vec_id").as("neighbor_id") +: sideB: _*)
     left.join(right, Seq("bucket"), "inner")
       .filter(col("vec_id") < col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) / (sqrt(col("nsq_a")) * sqrt(col("nsq_b"))))
+      .withColumn("cosine", exactCosine)
       .filter(col("cosine") >= threshold)
       .select(col("vec_id").as("keep_id"), col("neighbor_id").as("dup_id"), col("cosine"))
   }

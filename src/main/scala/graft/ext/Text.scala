@@ -375,9 +375,8 @@ object Text {
     // bounded 1-row corpus state: token total + doc count -> avgdl, N
     val st = dl.agg(sum(col("dl")), count(lit(1L))).first()
     if (st.isNullAt(0)) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("rank", IntegerType), StructField("doc_id", LongType),
-          StructField("bm25", DoubleType))))
+      return emptyFrame(spark, StructField("rank", IntegerType),
+        StructField("doc_id", LongType), StructField("bm25", DoubleType))
     }
     val nDocs = st.getLong(1)
     val avgdl = st.getLong(0).toDouble / nDocs.toDouble

@@ -526,6 +526,12 @@ class PlanSpec extends SparkSpec {
       // indexed side broadcast into the cell join; training's own
       // exchanges run in the bounded update() jobs, not here)
       "knn_cosine_ivf_trained" -> ((1, 1, Map("BroadcastHashJoin" -> 1))),
+      // the arithmetic-centroid and SQ8 searches share the trained
+      // searches' IVF probe, so they keep its shape; BQ adds the two
+      // broadcast joins of its exact re-score of the top-refineR
+      "knn_cosine_ivf" -> ((1, 1, Map("BroadcastHashJoin" -> 1))),
+      "knn_cosine_ivfsq" -> ((1, 1, Map("BroadcastHashJoin" -> 1))),
+      "knn_cosine_ivfbq" -> ((1, 3, Map("BroadcastHashJoin" -> 3))),
       // round-9: cluster-routed decontamination — ZERO shuffles on the
       // probe path (the streaming-readiness property made structural):
       // eval labeling + the cell route are both broadcast joins

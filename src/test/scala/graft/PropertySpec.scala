@@ -946,4 +946,71 @@ class PropertySpec extends SparkSpec {
     val rnd = new scala.util.Random(42L)
     for (_ <- 1 to 2; f <- families) check(f, rnd)
   }
+
+  test("property: every IVF search gives one answer at any shuffle width or input split") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.ext.{Cluster, Sim}
+
+    // 300 vectors, d = 16, around 6 seeded centres, plus one zero vector
+    // (no cosine, so never a probe; the ADC searches may still index its
+    // non-zero reconstruction)
+    val rnd = new scala.util.Random(15L)
+    val centres = Array.fill(6, 16)(rnd.nextDouble() * 2 - 1)
+    val vecs = (0 until 300).map { i =>
+      val c = centres(rnd.nextInt(6))
+      (i.toLong * 3L + 1L, c.map(x => (x + rnd.nextGaussian() * 0.25).toFloat))
+    } :+ ((1000L, Array.fill(16)(0f)))
+    val searches: Seq[(String, Boolean, DataFrame => DataFrame)] = Seq(
+      ("ivfTopK", true, Sim.ivfTopK(_, 5, 8, 2)),
+      ("ivfTopKTrained", true, e =>
+        Sim.ivfTopKTrained(e, Cluster.kmeansCentroids(e, k = 8, iters = 2), k = 5, nProbe = 2)),
+      ("ivfPqTopK", true, Sim.ivfPqTopK(_, m = 4, kSub = 8, coarseK = 8, nProbe = 2, k = 5)),
+      ("ivfPqRefinedTopK", true, Sim.ivfPqRefinedTopK(_, m = 4, kSub = 8, coarseK = 8,
+        nProbe = 2, k = 5, refineR = 10)),
+      ("ivfPqOpqTopK", true, Sim.ivfPqOpqTopK(_, m = 4, kSub = 8, coarseK = 8, nProbe = 2, k = 5)),
+      ("ivfSqTopK", true, Sim.ivfSqTopK(_, coarseK = 8, nProbe = 2, k = 5)),
+      ("ivfBqTopK", true, Sim.ivfBqTopK(_, coarseK = 8, nProbe = 2, k = 5, refineR = 10)),
+      ("ivfPqResidualTopK", true, Sim.ivfPqResidualTopK(_, m = 4, kSub = 8, coarseK = 8,
+        nProbe = 2, k = 5, iters = 2)),
+      ("ivfNprobeCurve", false, Sim.ivfNprobeCurve(_, k = 5, coarseK = 8, iters = 2,
+        nProbes = Seq(1, 2, 4))))
+
+    // the same rows as one partition, or shuffled into 5 by a seeded draw
+    def input(split: Boolean): DataFrame =
+      if (!split) vecs.toDF("vec_id", "embedding").coalesce(1)
+      else spark.createDataFrame(spark.sparkContext.parallelize(
+        new scala.util.Random(7L).shuffle(vecs).map { case (id, v) => Row(id, v.toSeq) }, 5),
+        vecs.toDF("vec_id", "embedding").schema)
+    // doubles print their shortest round-trip form: equal strings are equal bits
+    def answer(partitions: Int, split: Boolean, f: DataFrame => DataFrame): Seq[Row] = {
+      val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try f(input(split)).collect().toSeq.sortBy(_.toString)
+      finally prev.fold(spark.conf.unset("spark.sql.shuffle.partitions"))(
+        spark.conf.set("spark.sql.shuffle.partitions", _))
+    }
+    searches.foreach { case (name, neighbors, f) =>
+      val want = answer(1, split = false, f)
+      assert(want.nonEmpty, s"$name: empty answer, nothing to check")
+      assert(answer(7, split = false, f) == want, s"$name: 7 shuffle partitions moved the answer")
+      assert(answer(7, split = true, f) == want, s"$name: a re-split input moved the answer")
+      if (neighbors) {
+        val rows = want.map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"),
+          r.getAs[Int]("rank")))
+        assert(!rows.exists(r => r._1 == r._2), s"$name: a vector is its own neighbor")
+        assert(!rows.exists(_._1 == 1000L), s"$name: the zero vector probed")
+        assert(rows.map(r => (r._1, r._2)).distinct.size == rows.size, s"$name: a pair twice")
+        rows.groupBy(_._1).foreach { case (v, rs) =>
+          assert(rs.map(_._3).sorted == (1 to rs.size) && rs.size <= 5,
+            s"$name: vec $v ranks ${rs.map(_._3).sorted}")
+        }
+      } else {
+        val curve = want.map(r => (r.getAs[Int]("nprobe"), r.getAs[Long]("candidate_pairs"),
+          r.getAs[Long]("hit_pairs"), r.getAs[Long]("truth_pairs"))).sortBy(_._1)
+        assert(curve.map(_._1) == Seq(1, 2, 4), s"$name: operating points $curve")
+        assert(curve.map(_._2) == curve.map(_._2).sorted, s"$name: a wider probe lost candidates")
+        assert(curve.forall(c => c._3 <= c._4), s"$name: more hits than truth pairs")
+      }
+    }
+  }
 }
